@@ -615,15 +615,6 @@ def _labels_relation(spark: SparkSession, labels: dict, ntype) -> DataFrame:
             .localCheckpoint())
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
-    """(id, comp) labels for a BOUNDED, checkpointed edge relation via
-    driver-side union-find with min-id representatives — exactly the
-    star iteration's fixpoint (comp = min id of the node's component),
-    so callers see identical rows."""
-    return _labels_relation(edges.sparkSession, _union_find(edges),
-                            edges.schema[0].dataType)
-
-
 def _component_labels(pairs: DataFrame, id_a: str = "id_a",
                       id_b: str = "id_b") -> tuple:
     """(labels_dict, edges) when the graph fits the driver tier, else
@@ -2009,9 +2000,9 @@ def dedup_all_signal_clusters_query(spark: SparkSession, sf_dir: str) -> DataFra
     # the codebook scaled (the text side alone is 2.3×); scaled ==
     # static flat at the sf0.01 oracle scale, so the fixed SQL string
     # stays the oracle
-    mod, k, s = scaled_codebook_two_level(emb.count())
+    mod, k, supers, _ = scaled_codebook_two_level(emb.count())
     epairs = (semantic_pairs(emb, centroid_mod=mod, n_centroids=k,
-                             n_super=s)
+                             supers=supers)
               .select("id_a", "id_b", F.lit("embedding").alias("signal")))
     return multi_signal_clusters(text_pairs.unionByName(epairs))
 

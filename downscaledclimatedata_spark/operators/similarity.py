@@ -450,7 +450,7 @@ def _pq_encode_arrow(subs: DataFrame, cents: DataFrame,
 def _cascade_assign_arrow(base: DataFrame, leaf: DataFrame, id_col: str,
                           key_names: list,
                           probe2: bool = False) -> DataFrame:
-    """Hierarchical (two-/three-level) IVF routing as ONE Arrow pass.
+    """Hierarchical IVF routing of any depth as ONE Arrow pass.
 
     ``leaf``: the centroid relation annotated with its hierarchy depth —
     columns (kid, cv, cn2, lvl) where lvl = the SHALLOWEST level the row
@@ -2534,9 +2534,10 @@ def scaled_codebook(n_rows: int) -> tuple[int, int]:
     return max(1, CENTROID_MOD // scale), N_CENTROIDS * scale
 
 
-def scaled_codebook_two_level(n_rows: int) -> tuple[int, int, int]:
-    """(centroid_mod, n_centroids, n_super) for the all-vectors
-    operators when assignment routes through the two-level quantizer.
+def scaled_codebook_two_level(n_rows: int) -> tuple:
+    """(centroid_mod, n_centroids, supers, spread_every) for the
+    all-vectors operators when assignment routes through ONE super
+    level: ``supers = (n_super,)`` and ``spread_every=None``.
 
     With FLAT assignment the optimal codebook is k ∝ √N (assignment
     N·k balances cell scoring N²/k at N^1.5 — :func:`scaled_codebook`).
@@ -2547,25 +2548,25 @@ def scaled_codebook_two_level(n_rows: int) -> tuple[int, int, int]:
     ~10⁹ vectors).
 
     Below the growth threshold this returns the static codebook with
-    ``n_super == n_centroids`` — the degenerate-exact configuration —
+    ``supers == (n_centroids,)`` — the degenerate-exact configuration —
     and the consumers route that straight through flat
     :func:`ivf_assign`, so plans and results at the sf0.01 oracle scale
     (and on the adversarial edge corpora) are byte-identical to the
     flat path and the fixed SQL oracles stay valid.
     """
     if n_rows < 4 * KNN_CODEBOOK_BASE_N:  # same first growth point as
-        return CENTROID_MOD, N_CENTROIDS, N_CENTROIDS  # the flat schedule
+        return CENTROID_MOD, N_CENTROIDS, (N_CENTROIDS,), None  # flat
     import math
     r = n_rows // KNN_CODEBOOK_BASE_N
     s = max(2, round(r ** (2.0 / 3.0)))  # codebook growth factor
     k = N_CENTROIDS * s
-    return max(1, CENTROID_MOD // s), k, max(1, math.isqrt(k))
+    return max(1, CENTROID_MOD // s), k, (max(1, math.isqrt(k)),), None
 
 
-def scaled_codebook_three_level(
-        n_rows: int) -> tuple[int, int, int, int, int | None]:
-    """(centroid_mod, n_centroids, n_super, n_super2, spread_every) for
-    the all-vectors operators with THREE-level assignment routing.
+def scaled_codebook_three_level(n_rows: int) -> tuple:
+    """(centroid_mod, n_centroids, supers, spread_every) for the
+    all-vectors operators with THREE-level assignment routing:
+    ``supers = (s1, s2)`` with s1 ≈ k^(2/3), s2 ≈ k^(1/3).
 
     Two-level assignment (N·√k) balances cell scoring (N²/k) at
     k ∝ N^(2/3) — both terms N^(4/3), and the sf100 ladder measured
@@ -2589,16 +2590,16 @@ def scaled_codebook_three_level(
     subset of the one below, mirroring the static stride construction.
 
     Below the growth threshold this returns the static codebook with
-    ``n_super == n_super2 == n_centroids`` and ``spread_every=None`` —
-    consumers route that straight through flat :func:`ivf_assign`, so
+    ``supers == (n_centroids, n_centroids)`` and ``spread_every=None``
+    — consumers route that straight through flat :func:`ivf_assign`, so
     plans and results at the sf0.01 oracle scale (and on the
     adversarial edge corpora) are byte-identical to the flat path and
     the fixed SQL oracles stay valid.
 
     TIERED schedule (r12): in the band [4·BASE_N, THREE_LEVEL_MIN_N)
-    this returns the TWO-level configuration (``n_super2 == n_super``,
-    which :func:`_assigned_corpus` routes through
-    :func:`ivf_assign_two_level`). The r12 same-box interleaved A/B
+    this returns the TWO-level configuration (``supers == (s, s)``,
+    which :func:`_assigned_corpus` routes through ONE super level of
+    :func:`ivf_assign_cascade`). The r12 same-box interleaved A/B
     (BENCH_SCALE.md) measured the three-level routing constant at
     +16.9% wall AND −0.044 mean recall at 2,000 vectors, shrinking to
     +3–6% (noise) at 4,000–8,000 and flipping to a 40% WIN at 20,000 —
@@ -2607,14 +2608,13 @@ def scaled_codebook_three_level(
     exactly the depth-vs-N ladder production coarse quantizers walk.
     """
     if n_rows < 4 * KNN_CODEBOOK_BASE_N:
-        return (CENTROID_MOD, N_CENTROIDS, N_CENTROIDS, N_CENTROIDS,
-                None)
+        return CENTROID_MOD, N_CENTROIDS, (N_CENTROIDS, N_CENTROIDS), None
     if n_rows < KNN_THREE_LEVEL_MIN_N:
         # two-level routing, but with the layout-robust hash-spread
         # sample — the window sample would saturate (or come up empty)
         # on striped/offset id layouts, the r10 bug class
-        mod, k, s = scaled_codebook_two_level(n_rows)
-        return (mod, k, s, s, max(1, n_rows // k))
+        mod, k, (s,), _ = scaled_codebook_two_level(n_rows)
+        return mod, k, (s, s), max(1, n_rows // k)
     r = n_rows // KNN_CODEBOOK_BASE_N
     g = max(2, round(r ** 0.75))  # codebook growth factor: k ∝ N^(3/4)
     k = N_CENTROIDS * g
@@ -2622,26 +2622,33 @@ def scaled_codebook_three_level(
     s2 = max(1, round(k ** (1.0 / 3.0)))
     if s2 >= s1:  # tiny-growth corner: keep the hierarchy strict
         s2 = max(1, s1 // 2)
-    return (max(1, CENTROID_MOD // g), k, s1, s2,
-            max(1, n_rows // k))
+    return max(1, CENTROID_MOD // g), k, (s1, s2), max(1, n_rows // k)
+
+
+def _graph_codebook(n_rows: int) -> dict:
+    """:func:`scaled_codebook_three_level` as the codebook keyword
+    arguments every all-vectors consumer takes."""
+    mod, k, supers, every = scaled_codebook_three_level(n_rows)
+    return dict(centroid_mod=mod, n_centroids=k, supers=supers,
+                spread_every=every)
 
 
 def _assigned_corpus(emb: DataFrame, id_col: str, vec_col: str,
                      centroid_mod: int = CENTROID_MOD,
                      n_centroids: int = N_CENTROIDS,
-                     n_super: int | None = None,
-                     n_super2: int | None = None,
+                     supers: tuple | None = None,
                      spread_every: int | None = None) -> DataFrame:
     """(id, cid, qv, n2) for every nonzero-norm vector — the coarse-
     partitioned corpus relation the graph/prune operators join on.
 
-    ``n_super``: when given and < ``n_centroids``, cell assignment
-    routes through the two-level quantizer (:func:`ivf_assign_two_level`
-    — N·√k instead of N·k comparisons), the production path once the
+    ``supers``: cell assignment routes through the strictly shrinking
+    prefix of these super levels (:func:`_cascade_levels`,
+    :func:`ivf_assign_cascade` — N·√k with one level, N·3k^(1/3) with
+    two, instead of N·k comparisons), the production path once the
     codebook outgrows what a broadcast N·k crossJoin should score.
-    ``None`` or >= ``n_centroids`` keeps exact flat assignment (the
-    degenerate-exact configuration `scaled_codebook_two_level` emits at
-    oracle scale, byte-identical plan to before the knob existed).
+    ``None`` or a degenerate prefix keeps exact flat assignment (the
+    configuration the schedules emit at oracle scale, byte-identical
+    plan to before the knob existed).
 
     localCheckpoint: every consumer references the relation at least
     twice (both self-join sides, plus the sizes aggregate in
@@ -2654,18 +2661,12 @@ def _assigned_corpus(emb: DataFrame, id_col: str, vec_col: str,
     projected row, so the former ``emb ⋈ assign`` corpus-wide id join
     is gone — the checkpointed relation materializes straight off the
     shuffle-free assignment projection."""
-    if (n_super is not None and n_super2 is not None
-            and n_super2 < n_super < n_centroids):
-        cols = _ivf_assign_three_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
-            n_super2, spread_every=spread_every)
-    elif n_super is not None and n_super < n_centroids:
-        cols = _ivf_assign_two_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
-            spread_every=spread_every)
-    else:
-        cols = _ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                                n_centroids)
+    levels = _cascade_levels(n_centroids, supers)
+    cols = (_ivf_assign_cascade_cols(emb, id_col, vec_col, centroid_mod,
+                                     n_centroids, levels, spread_every)
+            if levels else
+            _ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
+                             n_centroids))
     return (cols.select(F.col(id_col), F.col("cid"), "qv", "n2")
             .filter(F.col("n2") > 0)
             .localCheckpoint())
@@ -2676,8 +2677,7 @@ def knn_graph(emb: DataFrame, id_col: str = "vec_id",
               centroid_mod: int = CENTROID_MOD,
               n_centroids: int = N_CENTROIDS,
               nprobe: int = 1,
-              n_super: int | None = None,
-              n_super2: int | None = None,
+              supers: tuple | None = None,
               spread_every: int | None = None) -> DataFrame:
     """Approximate k-nearest-neighbor graph over the WHOLE corpus.
 
@@ -2699,11 +2699,11 @@ def knn_graph(emb: DataFrame, id_col: str = "vec_id",
     be a window over the N·k assignment scores (N^1.5 rows through one
     shuffle). On the FLAT path the second-best cell comes from a SECOND
     struct-min pass that excludes the argmin cell — 2× assignment
-    compute, still one shuffled row per vector. On the THREE-LEVEL
-    (scaled) path the probe is hierarchical: the runner-up super-cell
-    at the last routing level yields ``cid2``
-    (:func:`ivf_assign_three_level` with ``nprobe=2`` — one extra
-    ~N-row routed argmin, NOT a flat rescan, so the recall knob
+    compute, still one shuffled row per vector. When ``supers`` routes
+    two or more levels (the scaled three-level path) the probe is
+    hierarchical: the runner-up super-cell at the last routing level
+    yields ``cid2`` (:func:`ivf_assign_cascade` with ``nprobe=2`` — one
+    extra ~N-row routed argmin, NOT a flat rescan, so the recall knob
     survives the scaled codebook where a flat second pass would cost
     the N·k the hierarchy exists to avoid). In both cases corpus
     vectors stay in exactly one cell, so candidates never duplicate.
@@ -2712,77 +2712,59 @@ def knn_graph(emb: DataFrame, id_col: str = "vec_id",
     from pyspark.sql import Window
     if nprobe not in (1, 2):
         raise ValueError(f"nprobe must be 1 or 2, got {nprobe}")
-    # n_super routes cell assignment through the two-level quantizer
-    # (N·√k); n_super2 additionally through the three-level one
-    # (N·k^(1/3), see scaled_codebook_three_level)
-    three_level = (n_super is not None and n_super2 is not None
-                   and n_super2 < n_super < n_centroids)
-    if nprobe == 2 and three_level:
+    # supers route cell assignment through the cascade: N·√k with one
+    # super level, N·k^(1/3) with two (see scaled_codebook_three_level)
+    levels = _cascade_levels(n_centroids, supers)
+    if nprobe == 2 and len(levels) >= 2:
         # the *_cols variant carries (qv, n2) on the assignment row, so
         # no corpus-wide id join is needed to re-attach vectors (r13)
-        enriched = (_ivf_assign_three_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
-            n_super2, spread_every=spread_every, nprobe=2)
+        enriched = (_ivf_assign_cascade_cols(
+            emb, id_col, vec_col, centroid_mod, n_centroids, levels,
+            spread_every, nprobe=2)
             .select(F.col(id_col), F.col("cid"), F.col("cid2"),
                     "qv", "n2")
             .filter(F.col("n2") > 0)
             .localCheckpoint())
         base = enriched.select(F.col(id_col), "cid", "qv", "n2")
-        # the probe-2 copy extends the QUERY side only, as on the flat
-        # path — the candidate side must keep one cell per vector
-        qbase = base.unionByName(
-            enriched.filter(F.col("cid2").isNotNull())
-            .select(F.col(id_col), F.col("cid2").alias("cid"),
-                    "qv", "n2"))
-        a = qbase.select(F.col(id_col).alias("src_id"), "cid",
-                         F.col("qv").alias("aq"), F.col("n2").alias("an2"))
-        b = base.select(F.col(id_col).alias("neighbor_id"), "cid",
-                        F.col("qv").alias("bq"), F.col("n2").alias("bn2"))
-        scored = (a.join(b.hint("merge"), "cid")
-                  .filter(F.col("src_id") != F.col("neighbor_id"))
-                  .select("src_id", "neighbor_id",
-                          (int_dot(F.col("aq"), F.col("bq")).cast("double")
-                           / (F.sqrt(F.col("an2").cast("double"))
-                              * F.sqrt(F.col("bn2").cast("double"))))
-                          .alias("cosine")))
-        w = Window.partitionBy("src_id").orderBy(F.col("cosine").desc(),
-                                                 F.col("neighbor_id"))
-        return (scored.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k)
-                .select(F.col("src_id").alias("vec_id"), "neighbor_id",
-                        "cosine", "rnk"))
-    base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
-                            n_centroids, n_super, n_super2, spread_every)
-    if nprobe == 2:
-        # the probe's centroid relation must be sampled EXACTLY like the
-        # assignment's, or the second-best cell id won't name any
-        # candidate cell (spread-assigned cells vs window-probed ids)
-        cents_pred = (_spread_sample(id_col, spread_every)
-                      if spread_every is not None
-                      else _fixed_sample(id_col, centroid_mod, n_centroids))
-        cents = (emb.select(F.col(id_col),
-                            quantize(F.col(vec_col)).alias("qv"),
-                            sq_norm(quantize(F.col(vec_col))).alias("n2"))
-                 .filter(cents_pred)
-                 .select(F.col(id_col).alias("cid2"),
-                         F.col("qv").alias("cv"), F.col("n2").alias("cn2")))
-        # per-row argmin over the broadcast codebook minus the vector's
-        # own cell — the shuffle-free form of the former crossJoin +
-        # groupBy (r13; identical argmin and tie-break, and a vector
-        # with no other cell drops out exactly as the inner join did)
-        crow = _cands_row(cents, ["cid2", "cv", "cn2"], "pcands")
-        second = (base.crossJoin(F.broadcast(crow))
-                  .withColumn("cid2", _argmin_pick(
-                      "filter(pcands, c -> c.cid2 != cid)",
-                      "cid2", "cv", "cn2"))
-                  .filter(F.col("cid2").isNotNull())
+        second = (enriched.filter(F.col("cid2").isNotNull())
                   .select(F.col(id_col), F.col("cid2").alias("cid"),
                           "qv", "n2"))
-        # the probe-2 copy extends the QUERY side only — the candidate
-        # side must keep one cell per vector or candidates duplicate
-        qbase = base.unionByName(second)
     else:
-        qbase = base
+        base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
+                                n_centroids, levels, spread_every)
+        second = None
+        if nprobe == 2:
+            # the probe's centroid relation must be sampled EXACTLY like
+            # the assignment's, or the second-best cell id won't name any
+            # candidate cell (spread-assigned cells vs window-probed ids)
+            cents_pred = (_spread_sample(id_col, spread_every)
+                          if spread_every is not None
+                          else _fixed_sample(id_col, centroid_mod,
+                                             n_centroids))
+            cents = (emb.select(F.col(id_col),
+                                quantize(F.col(vec_col)).alias("qv"),
+                                sq_norm(quantize(F.col(vec_col)))
+                                .alias("n2"))
+                     .filter(cents_pred)
+                     .select(F.col(id_col).alias("cid2"),
+                             F.col("qv").alias("cv"),
+                             F.col("n2").alias("cn2")))
+            # per-row argmin over the broadcast codebook minus the
+            # vector's own cell — the shuffle-free form of the former
+            # crossJoin + groupBy (r13; identical argmin and tie-break,
+            # and a vector with no other cell drops out exactly as the
+            # inner join did)
+            crow = _cands_row(cents, ["cid2", "cv", "cn2"], "pcands")
+            second = (base.crossJoin(F.broadcast(crow))
+                      .withColumn("cid2", _argmin_pick(
+                          "filter(pcands, c -> c.cid2 != cid)",
+                          "cid2", "cv", "cn2"))
+                      .filter(F.col("cid2").isNotNull())
+                      .select(F.col(id_col), F.col("cid2").alias("cid"),
+                              "qv", "n2"))
+    # the probe-2 copy extends the QUERY side only — the candidate side
+    # must keep one cell per vector or candidates duplicate
+    qbase = base if second is None else base.unionByName(second)
     a = qbase.select(F.col(id_col).alias("src_id"), "cid",
                      F.col("qv").alias("aq"), F.col("n2").alias("an2"))
     b = base.select(F.col(id_col).alias("neighbor_id"), "cid",
@@ -2818,9 +2800,7 @@ def similarity_knn_graph_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one cheap count job sizes the codebook ∝ N^(3/4) with three-level
     # assignment (see scaled_codebook_three_level); identical to the
     # static flat (25, 16) at oracle scale
-    mod, k, s1, s2, ev = scaled_codebook_three_level(emb.count())
-    return knn_graph(emb, centroid_mod=mod, n_centroids=k, n_super=s1,
-                     n_super2=s2, spread_every=ev)
+    return knn_graph(emb, **_graph_codebook(emb.count()))
 
 
 _KNN_GRAPH_SQL = _coarse_sql_prefix(carry_n2=True, assigned="search") + f""", scored AS (
@@ -2856,8 +2836,7 @@ def knn_graph_recall(emb: DataFrame, id_col: str = "vec_id",
                      centroid_mod: int = CENTROID_MOD,
                      n_centroids: int = N_CENTROIDS,
                      nprobe: int = 1,
-                     n_super: int | None = None,
-                     n_super2: int | None = None,
+                     supers: tuple | None = None,
                      spread_every: int | None = None,
                      query_every: int = KNN_RECALL_EVERY,
                      query_hash: bool = False) -> DataFrame:
@@ -2914,7 +2893,7 @@ def knn_graph_recall(emb: DataFrame, id_col: str = "vec_id",
              .filter(F.col("rnk") <= k)
              .select("query_id", "neighbor_id"))
     graph = knn_graph(emb, id_col, vec_col, k, centroid_mod, n_centroids,
-                      nprobe, n_super, n_super2, spread_every)
+                      nprobe, supers, spread_every)
     got = (graph.select(F.col("vec_id").alias("query_id"), "neighbor_id")
            .withColumn("hit", F.lit(1)))
     return (truth.join(got, ["query_id", "neighbor_id"], "left")
@@ -3003,10 +2982,10 @@ def semantic_pairs(emb: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", tau: float = SEM_TAU,
                    centroid_mod: int = CENTROID_MOD,
                    n_centroids: int = N_CENTROIDS,
-                   n_super: int | None = None) -> DataFrame:
+                   supers: tuple | None = None) -> DataFrame:
     """(id_a, id_b, cosine) embedding near-dup pairs, cluster-scoped."""
     base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
-                            n_centroids, n_super)
+                            n_centroids, supers)
     return semantic_pairs_from_assigned(base, id_col, tau) \
         .select("id_a", "id_b", "cosine")
 
@@ -3015,8 +2994,7 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
                    vec_col: str = "embedding", tau: float = SEM_TAU,
                    centroid_mod: int = CENTROID_MOD,
                    n_centroids: int = N_CENTROIDS,
-                   n_super: int | None = None,
-                   n_super2: int | None = None,
+                   supers: tuple | None = None,
                    spread_every: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): drop semantic near-duplicates inside
     each embedding cluster, keeping the smallest id of every near-pair.
@@ -3033,7 +3011,7 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
     (cid, id), shuffle-keyed by the uniform id.
     """
     base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
-                            n_centroids, n_super, n_super2, spread_every)
+                            n_centroids, supers, spread_every)
     pairs = semantic_pairs_from_assigned(base, id_col, tau)
     removed = (pairs.select("cid", F.col("id_b").alias("rid")).distinct()
                .groupBy("cid").agg(F.count("*").alias("n_removed")))
@@ -3050,9 +3028,7 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
 
 def dedup_semantic_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    mod, k, s1, s2, ev = scaled_codebook_three_level(emb.count())
-    return semantic_dedup(emb, centroid_mod=mod, n_centroids=k,
-                          n_super=s1, n_super2=s2, spread_every=ev)
+    return semantic_dedup(emb, **_graph_codebook(emb.count()))
 
 
 _DEDUP_SEMANTIC_SQL = _coarse_sql_prefix(carry_n2=True, assigned="search") + f""", pairs AS (
@@ -3078,147 +3054,9 @@ register(QuerySpec(
                 "pairs, keep-min-id rule, per-cluster removal summary"))
 
 
-# --- two-level (hierarchical) IVF coarse assignment -----------------------------
+# --- hierarchical (cascade) IVF coarse assignment ------------------------------
 
-N_SUPER = 4  # super-cell count at the oracle scale (= sqrt(N_CENTROIDS))
-
-
-def ivf_assign_two_level(emb: DataFrame, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         centroid_mod: int = CENTROID_MOD,
-                         n_centroids: int = N_CENTROIDS,
-                         n_super: int = N_SUPER,
-                         spread_every: int | None = None) -> DataFrame:
-    """Hierarchical IVF coarse quantizer: route through √k super-cells.
-
-    Flat assignment is N·k comparisons — fine while the codebook is
-    broadcastable, but beyond ~10⁹ vectors a production codebook has
-    10⁴-10⁵ lists and N·k becomes the build bottleneck (exactly the
-    wall BENCH_SCALE.md's round-6 note predicts). The standard fix is a
-    two-level quantizer: (1) assign each CENTROID to its nearest
-    super-centroid (k·s work, s = √k); (2) assign each vector to its
-    nearest super-centroid (N·s); (3) compare the vector only against
-    the ~k/s centroids of its super-cell (N·k/s). Total N·√k — for a
-    65k-list codebook, a 256× assignment speedup. Approximation: the
-    true nearest centroid can live in a neighboring super-cell
-    (multiprobe over super-cells is the recall knob, as everywhere in
-    this family). With ``n_super == n_centroids`` the construction
-    degenerates to exact flat assignment (pinned by unit test).
-
-    Super-centroids are a deterministic stride-subsample OF the centroid
-    sample, so both levels reproduce exactly in the DuckDB oracle.
-    ``spread_every`` switches both levels to the nested id-hash sample
-    (:func:`_spread_sample` — layout-robust; REQUIRED when the tiered
-    schedule picks this path on a corpus whose ids are striped or
-    offset, where the window sample would saturate or come up empty).
-    Returns (id, super_cid, cid).
-
-    Execution shape (r13): ONE Arrow routing pass
-    (:func:`_cascade_assign_arrow`) — the annotated codebook collects
-    once, the centroid→super routing runs driver-side
-    (codebook-sized), and the corpus routes both levels inside a
-    single vectorized kernel (same lexicographic minima, NULL-first
-    semantics and inner-join drop semantics as the relational and HOF
-    forms it replaces, bit-equal results). Zero corpus shuffles for
-    assignment, and none of the sequential one-row-aggregate broadcast
-    waves the per-row HOF form paid (~6 stage waves ≈ 1.7 s at sf0.1
-    for trivially small per-row work).
-    """
-    return (_ivf_assign_two_level_cols(
-        emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
-        spread_every)
-        .select(F.col(id_col), "super_cid", "cid"))
-
-
-def _ivf_assign_two_level_cols(emb: DataFrame, id_col: str = "vec_id",
-                               vec_col: str = "embedding",
-                               centroid_mod: int = CENTROID_MOD,
-                               n_centroids: int = N_CENTROIDS,
-                               n_super: int = N_SUPER,
-                               spread_every: int | None = None
-                               ) -> DataFrame:
-    """:func:`ivf_assign_two_level` keeping the quantized vector
-    columns: (id, qv, n2, super_cid, cid) as one shuffle-free
-    projection (see the public docstring)."""
-    stride = max(1, n_centroids // n_super)
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    if spread_every is not None:
-        cents_pred = _spread_sample(id_col, spread_every)
-        supers_pred = _spread_sample("cid", spread_every * stride)
-    else:
-        cents_pred = _fixed_sample(id_col, centroid_mod, n_centroids)
-        supers_pred = _fixed_sample("cid", centroid_mod * stride, n_super)
-    cents = (base.filter(cents_pred)
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
-                     F.col("n2").alias("cn2")))
-    leaf = cents.select(F.col("cid").alias("kid"), "cv", "cn2",
-                        F.when(supers_pred, F.lit(0)).otherwise(F.lit(1))
-                        .alias("lvl"))
-    return (_cascade_assign_arrow(base, leaf, id_col, ["sid", "cid"])
-            .select(F.col(id_col), "qv", "n2",
-                    F.col("sid").alias("super_cid"), "cid"))
-
-
-def similarity_ivf_two_level_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    return ivf_assign_two_level(emb)
-
-
-def _two_level_sql(centroid_mod: int = CENTROID_MOD,
-                   n_centroids: int = N_CENTROIDS,
-                   n_super: int = N_SUPER) -> str:
-    stride = max(1, n_centroids // n_super)
-    dot = lambda a, b: (f"list_sum(list_transform(range(1, {DIM + 1}), "
-                        f"i -> {a}[i] * {b}[i]))")
-    return f"""
-WITH q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
-base AS (
-  SELECT vec_id, qv,
-    list_sum(list_transform(range(1, {DIM + 1}), i -> qv[i] * qv[i])) AS in2
-  FROM q
-), cents AS (
-  SELECT vec_id AS cid, qv AS cv, in2 AS cn2 FROM base
-  WHERE {_fixed_sample_sql('vec_id', centroid_mod, n_centroids)}
-), supers AS (
-  SELECT cid AS sid, cv AS sv, cn2 AS sn2 FROM cents
-  WHERE {_fixed_sample_sql('cid', centroid_mod * stride, n_super)}
-), c2s AS (
-  SELECT cid, sid FROM (
-    SELECT cents.cid, supers.sid,
-      ROW_NUMBER() OVER (PARTITION BY cents.cid
-        ORDER BY cents.cn2 + supers.sn2 - 2 * {dot('cents.cv', 'supers.sv')},
-                 supers.sid) AS rn
-    FROM cents CROSS JOIN supers) WHERE rn = 1
-), v2s AS (
-  SELECT vec_id, sid FROM (
-    SELECT base.vec_id, supers.sid,
-      ROW_NUMBER() OVER (PARTITION BY base.vec_id
-        ORDER BY base.in2 + supers.sn2 - 2 * {dot('base.qv', 'supers.sv')},
-                 supers.sid) AS rn
-    FROM base CROSS JOIN supers) WHERE rn = 1
-)
-SELECT vec_id, sid AS super_cid, cid FROM (
-  SELECT b.vec_id, v.sid,  c.cid,
-    ROW_NUMBER() OVER (PARTITION BY b.vec_id
-      ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
-  FROM base b
-  JOIN v2s v ON v.vec_id = b.vec_id
-  JOIN c2s x ON x.sid = v.sid
-  JOIN cents c ON c.cid = x.cid) WHERE rn = 1
-"""
-
-
-register(QuerySpec(
-    "similarity_ivf_two_level", similarity_ivf_two_level_query,
-    _two_level_sql(),
-    description=f"hierarchical IVF coarse assignment through {N_SUPER} "
-                "super-cells: N·sqrt(k) build instead of N·k — the "
-                "production-codebook (10^4-10^5 lists) assignment path"))
-
-
-# --- three-level IVF coarse assignment (the N^(5/4) kNN-graph path) -------------
-
+N_SUPER = 4   # super-cell count at the oracle scale (= sqrt(N_CENTROIDS))
 N_SUPER2 = 2  # super²-cell count at the oracle scale (≈ k^(1/3))
 
 
@@ -3238,329 +3076,239 @@ def _spread_sample(id_col: str, every: int) -> Column:
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(every)) == 0
 
 
-def ivf_assign_three_level(emb: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           centroid_mod: int = CENTROID_MOD,
-                           n_centroids: int = N_CENTROIDS,
-                           n_super: int = N_SUPER,
-                           n_super2: int = N_SUPER2,
-                           spread_every: int | None = None,
-                           nprobe: int = 1) -> DataFrame:
-    """Three-level hierarchical IVF coarse quantizer: route through
-    ~k^(1/3) super²-cells, then ~k^(2/3) super-cells, then centroids.
+def _cascade_levels(n_centroids: int, supers) -> tuple:
+    """The super-level counts a consumer actually routes through: the
+    longest prefix of ``supers`` that strictly shrinks from
+    ``n_centroids`` (k > s1 > s2 > …). An empty result means exact flat
+    assignment — the degenerate-exact configuration the schedules emit
+    at oracle scale, so those plans stay the flat ones."""
+    levels: list = []
+    for s in supers or ():
+        if s >= (levels[-1] if levels else n_centroids):
+            break
+        levels.append(s)
+    return tuple(levels)
 
-    Per-vector assignment work is s2 + s1/s2 + k/s1 ≈ 3·k^(1/3)
-    comparisons (vs √k two-level, k flat). With the codebook schedule
-    k ∝ N^(3/4) (:func:`scaled_codebook_three_level`) both the N·3k^(1/3)
-    assignment AND the N²/k cell scoring are N^(5/4) — the fix for the
-    N^(4/3) asymptote the r10 sf100 ladder measured at 2M+ vectors.
-    Every level's candidate relation is codebook-sized and broadcast;
-    the argmin joins explode to N·(level fan-out) rows but partial
-    min-struct aggregation combines them map-side, so each level
-    shuffles ~N rows once. Approximation: the true nearest centroid can
-    live across a super-cell boundary at either level (the recall knob
-    is multiprobe, as everywhere in this family).
 
-    ``spread_every``: when given, all three levels sample by nested id
-    hash (:func:`_spread_sample` — layout-robust, the scaled path);
-    when ``None``, by the static stride construction (deterministic in
-    plain SQL, so the fixed DuckDB oracle reproduces both levels).
-    With ``n_super2 == n_super == n_centroids`` the construction
+def _cascade_key_names(depth: int) -> list:
+    """Output key columns of a ``depth``-super-level cascade, top level
+    first: super{depth}_cid … super2_cid, super_cid, cid."""
+    return [f"super{j}_cid" if j > 1 else "super_cid"
+            for j in range(depth, 0, -1)] + ["cid"]
+
+
+def _cascade_strides(n_centroids: int, supers) -> list:
+    """Cumulative sampling stride per level, leaf first: level j keeps
+    every ``stride[j]``-th candidate of the corpus sample, so each level
+    is a nested subset of the one below it."""
+    counts = (n_centroids, *supers)
+    strides = [1]
+    for j in range(1, len(counts)):
+        strides.append(strides[-1] * max(1, counts[j - 1] // counts[j]))
+    return strides
+
+
+def ivf_assign_cascade(emb: DataFrame, id_col: str = "vec_id",
+                       vec_col: str = "embedding",
+                       centroid_mod: int = CENTROID_MOD,
+                       n_centroids: int = N_CENTROIDS,
+                       supers: tuple = (N_SUPER,),
+                       spread_every: int | None = None,
+                       nprobe: int = 1) -> DataFrame:
+    """Hierarchical IVF coarse quantizer of any depth: route each vector
+    through ``supers = (s1, s2, …)`` super-cell levels (s1 the finest),
+    then to its nearest centroid inside the chosen super-cell.
+
+    Flat assignment is N·k comparisons — fine while the codebook is
+    broadcastable, but beyond ~10⁹ vectors a production codebook has
+    10⁴-10⁵ lists and N·k becomes the build bottleneck. One super level
+    of √k cells costs N·√k; two levels of ~k^(2/3) and ~k^(1/3) cells
+    cost s2 + s1/s2 + k/s1 ≈ 3·k^(1/3) per vector, which moves the
+    kNN-graph codebook balance to k ∝ N^(3/4)
+    (:func:`scaled_codebook_three_level`): assignment AND N²/k cell
+    scoring are both N^(5/4). Every codebook member is routed down the
+    same chain as a vector, so each level-j cell owns the level-(j+1)
+    members that route into it. Approximation: the true nearest
+    centroid can live across a super-cell boundary at any level (the
+    recall knob is multiprobe, as everywhere in this family). With
+    every ``supers`` entry equal to ``n_centroids`` the construction
     degenerates to exact flat assignment (pinned by unit test).
 
-    ``nprobe=2`` is the recall knob for the SCALED path (the r11
-    verdict's missing lever): the second-best super-cell at the LAST
-    routing level — the runner-up ``sid1`` within the vector's
-    ``sid2`` — is probed too, and the cid argmin runs inside it,
-    yielding a second candidate cell ``cid2``. The exact cid scoring
-    already covers the best sid1's interior, so the first recall loss
-    is across its boundary; the runner-up sid1 is the cheapest repair
-    (one more ~N-row routed argmin, no fan-out growth). ``cid2`` is
-    NULL when the vector's sid2 contains a single sid1, and is never
-    equal to ``cid`` (each centroid maps to exactly one sid1).
+    Sampling: level j keeps a nested stride-subsample of the centroid
+    sample, the static window (deterministic in plain SQL, so
+    :func:`_cascade_sql` mirrors every level), or with
+    ``spread_every`` the nested id-hash sample (:func:`_spread_sample`
+    — layout-robust; REQUIRED on striped or offset id layouts, where
+    the window sample saturates or comes up empty).
 
-    Returns (id, super2_cid, super_cid, cid) — plus ``cid2`` when
+    ``nprobe=2`` is the scaled path's recall knob: the runner-up cell
+    at the leaf's parent level is probed too and the centroid argmin
+    runs inside it, yielding a second candidate cell ``cid2`` (one more
+    ~N-row routed argmin, no fan-out growth). ``cid2`` is NULL when the
+    parent cell has a single child, and never equals ``cid`` (each
+    centroid routes to exactly one parent).
+
+    Returns (id, super{d}_cid … super_cid, cid) — plus ``cid2`` when
     ``nprobe=2``.
 
     Execution shape (r13): ONE Arrow routing pass
-    (:func:`_cascade_assign_arrow`) — the annotated codebook collects
-    once, the sid2→sid1→cid routing of the centroids runs driver-side
-    (codebook-sized), and the corpus routes all three levels (plus the
-    probe-2 runner-up top-2) inside a single vectorized kernel with
-    the identical lexicographic minima, NULL-first ordering and
-    inner-join drop semantics as the relational/HOF chains it
-    replaces — bit-equal results. Zero corpus exchanges for
-    assignment, and none of the sequential one-row-aggregate
-    broadcast stage waves of the per-row expression form.
+    (:func:`_cascade_assign_arrow`) — the level-annotated codebook
+    collects once, the codebook-internal routing runs driver-side
+    (codebook-sized), and the corpus routes every level (plus the
+    probe-2 runner-up) inside a single vectorized kernel with the
+    lexicographic minima, NULL-first ordering and inner-join drop
+    semantics of the relational chains it replaced — bit-equal
+    results, zero corpus exchanges for assignment.
     """
-    cols = _ivf_assign_three_level_cols(
-        emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
-        n_super2, spread_every=spread_every, nprobe=nprobe)
-    out = [F.col(id_col), "super2_cid", "super_cid", "cid"]
-    return cols.select(*out, "cid2") if nprobe == 2 else cols.select(*out)
+    return _ivf_assign_cascade_cols(
+        emb, id_col, vec_col, centroid_mod, n_centroids, supers,
+        spread_every, nprobe).drop("qv", "n2")
 
 
-def _ivf_assign_three_level_cols(emb: DataFrame, id_col: str = "vec_id",
-                                 vec_col: str = "embedding",
-                                 centroid_mod: int = CENTROID_MOD,
-                                 n_centroids: int = N_CENTROIDS,
-                                 n_super: int = N_SUPER,
-                                 n_super2: int = N_SUPER2,
-                                 spread_every: int | None = None,
-                                 nprobe: int = 1) -> DataFrame:
-    """:func:`ivf_assign_three_level` keeping the quantized vector
-    columns: (id, qv, n2, super2_cid, super_cid, cid[, cid2]) as one
-    shuffle-free projection (see the public docstring)."""
+def _ivf_assign_cascade_cols(emb: DataFrame, id_col: str = "vec_id",
+                             vec_col: str = "embedding",
+                             centroid_mod: int = CENTROID_MOD,
+                             n_centroids: int = N_CENTROIDS,
+                             supers: tuple = (N_SUPER,),
+                             spread_every: int | None = None,
+                             nprobe: int = 1) -> DataFrame:
+    """:func:`ivf_assign_cascade` keeping the quantized vector columns:
+    (id, qv, n2, super{d}_cid … cid[, cid2]) as one shuffle-free
+    projection (see the public docstring)."""
     if nprobe not in (1, 2):
         raise ValueError(f"nprobe must be 1 or 2, got {nprobe}")
     base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
                       sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    if spread_every is not None:
-        e1 = max(1, n_centroids // n_super)
-        e2 = max(1, n_super // n_super2)
-        cents_pred = _spread_sample(id_col, spread_every)
-        sup1_pred = _spread_sample("cid", spread_every * e1)
-        # on the cents relation directly: the nested moduli make each
-        # level's predicate imply the one below (every·e1·e2 divisible
-        # by every·e1), so sup2 ≡ cents rows passing this alone
-        sup2_on_cid = _spread_sample("cid", spread_every * e1 * e2)
-    else:
-        stride1 = max(1, n_centroids // n_super)
-        stride2 = max(1, n_super // n_super2)
-        cents_pred = _fixed_sample(id_col, centroid_mod, n_centroids)
-        sup1_pred = _fixed_sample("cid", centroid_mod * stride1, n_super)
-        # same implication for the stride construction: the level-2
-        # window (mod·s1·s2, n_super2) sits inside the level-1 window
-        sup2_on_cid = _fixed_sample("cid", centroid_mod * stride1 * stride2,
-                                    n_super2)
-    cents = base.filter(cents_pred).select(
+    counts = (n_centroids, *supers)
+    preds = [(_spread_sample(id_col if j == 0 else "cid", spread_every * st)
+              if spread_every is not None
+              else _fixed_sample(id_col if j == 0 else "cid",
+                                 centroid_mod * st, counts[j]))
+             for j, st in enumerate(_cascade_strides(n_centroids, supers))]
+    cents = base.filter(preds[0]).select(
         F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
         F.col("n2").alias("cn2"))
-    # one Arrow pass routes corpus AND codebook internals — the
-    # codebook collects ONCE with per-row hierarchy depth (the nested
-    # moduli make sup2 ≡ sup2_on_cid on cents), the sid2→sid1→cid chain
-    # for centroids runs driver-side (codebook-sized), and the probe-2
-    # runner-up is the kernel's top-2 at the sid1 level with the
-    # identical (NULL-first d, key) ordering the array_sort form used
-    # lvl 0 requires BOTH predicates: the nested moduli make sup2_on_cid
-    # imply sup1_pred for every schedule the engine constructs, but a
-    # degenerate n_super2 > n_super would break the window nesting in the
-    # fixed-stride branch — the explicit conjunction keeps the hierarchy
-    # membership identical to the old nested sup1.filter(sup2) form for
-    # ANY parameterization (no-op for the shipped schedules).
-    leaf = cents.select(
-        F.col("cid").alias("kid"), "cv", "cn2",
-        F.when(sup2_on_cid & sup1_pred, F.lit(0))
-        .when(sup1_pred, F.lit(1)).otherwise(F.lit(2)).alias("lvl"))
-    routed = _cascade_assign_arrow(base, leaf, id_col,
-                                   ["sid2", "sid1", "cid"],
-                                   probe2=(nprobe == 2))
-    out = [F.col(id_col), "qv", "n2", F.col("sid2").alias("super2_cid"),
-           F.col("sid1").alias("super_cid"), "cid"]
-    if nprobe == 2:
-        out.append(F.col("cid2"))
-    return routed.select(*out)
+    # lvl = the SHALLOWEST level a centroid belongs to (0 = top). Level
+    # membership is the conjunction of every predicate below it: the
+    # nested strides/moduli make the deeper predicate imply the others
+    # for every schedule the engine builds, and the explicit conjunction
+    # keeps membership nested for ANY parameterization.
+    depth = len(supers)
+    lvl, member = F.lit(depth), None
+    for j in range(1, depth + 1):
+        member = preds[j] if member is None else preds[j] & member
+        lvl = F.when(member, F.lit(depth - j)).otherwise(lvl)
+    leaf = cents.select(F.col("cid").alias("kid"), "cv", "cn2",
+                        lvl.alias("lvl"))
+    return _cascade_assign_arrow(base, leaf, id_col,
+                                 _cascade_key_names(depth),
+                                 probe2=(nprobe == 2))
 
 
-def similarity_ivf_three_level_query(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    return ivf_assign_three_level(emb)
+def _cascade_route_cte(name: str, src: str, j: int, prev: str | None,
+                       keep: str = "rn = 1") -> str:
+    """DuckDB CTE routing every ``src`` row one level deeper: the argmin
+    over level ``j``'s members of the row's level-(j-1) cell (over all
+    of level 0 when j = 0). Rows carry their keys k0 … kj; a row whose
+    cell has no members drops, like the engine's inner-join miss."""
+    dot = (f"list_sum(list_transform(range(1, {DIM + 1}), "
+           f"i -> s.qv[i] * p.qv[i]))")
+    carried = "".join(f"r.k{i}, " for i in range(j))
+    joins = ("CROSS JOIN lv0 p" if j == 0 else
+             f"JOIN {prev} r ON r.vec_id = s.vec_id\n"
+             f"    JOIN m{j}_{j - 1} m ON m.k{j - 1} = r.k{j - 1}\n"
+             f"    JOIN lv{j} p ON p.vec_id = m.vec_id")
+    keys = "".join(f", k{i}" for i in range(j + 1))
+    return f"""{name} AS (
+  SELECT vec_id{keys}, rn FROM (
+    SELECT s.vec_id, {carried}p.vec_id AS k{j},
+      ROW_NUMBER() OVER (PARTITION BY s.vec_id
+        ORDER BY s.in2 + p.in2 - 2 * {dot}, p.vec_id) AS rn
+    FROM {src} s {joins}) WHERE {keep}
+)"""
 
 
-def _three_level_sql(centroid_mod: int = CENTROID_MOD,
-                     n_centroids: int = N_CENTROIDS,
-                     n_super: int = N_SUPER,
-                     n_super2: int = N_SUPER2) -> str:
-    stride1 = max(1, n_centroids // n_super)
-    stride2 = max(1, n_super // n_super2)
-    dot = lambda a, b: (f"list_sum(list_transform(range(1, {DIM + 1}), "
-                        f"i -> {a}[i] * {b}[i]))")
-    return f"""
-WITH q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
+def _cascade_sql(supers: tuple, probe2: bool = False,
+                 centroid_mod: int = CENTROID_MOD,
+                 n_centroids: int = N_CENTROIDS) -> str:
+    """DuckDB oracle of :func:`ivf_assign_cascade` at the static stride
+    configuration, for any depth. Level relations lv0 (top) … lvD (the
+    centroid sample) are nested window samples; every level-j member is
+    routed from the top through levels 0 … j-1 (``mj_i``), which is
+    what assigns it to its level-(j-1) cell; the corpus then routes the
+    same way through every level. ``probe2`` keeps rn <= 2 at the leaf's
+    parent level and runs the centroid argmin inside the runner-up cell
+    too (``cid2``, coalesced to -1 like the engine's spec)."""
+    depth = len(supers)
+    counts = (n_centroids, *supers)
+    ctes = [f"""q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
 base AS (
   SELECT vec_id, qv,
     list_sum(list_transform(range(1, {DIM + 1}), i -> qv[i] * qv[i])) AS in2
   FROM q
-), cents AS (
-  SELECT vec_id AS cid, qv AS cv, in2 AS cn2 FROM base
-  WHERE {_fixed_sample_sql('vec_id', centroid_mod, n_centroids)}
-), sup1 AS (
-  SELECT cid AS sid1, cv AS s1v, cn2 AS s1n2 FROM cents
-  WHERE {_fixed_sample_sql('cid', centroid_mod * stride1, n_super)}
-), sup2 AS (
-  SELECT sid1 AS sid2, s1v AS s2v, s1n2 AS s2n2 FROM sup1
-  WHERE {_fixed_sample_sql('sid1', centroid_mod * stride1 * stride2,
-                           n_super2)}
-), s1map AS (
-  SELECT sid1, sid2 FROM (
-    SELECT sup1.sid1, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY sup1.sid1
-        ORDER BY sup1.s1n2 + sup2.s2n2 - 2 * {dot('sup1.s1v', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM sup1 CROSS JOIN sup2) WHERE rn = 1
-), c2s2 AS (
-  SELECT cid, sid2 FROM (
-    SELECT cents.cid, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY cents.cid
-        ORDER BY cents.cn2 + sup2.s2n2 - 2 * {dot('cents.cv', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM cents CROSS JOIN sup2) WHERE rn = 1
-), c2s1 AS (
-  SELECT cid, sid1 FROM (
-    SELECT c.cid, m.sid1,
-      ROW_NUMBER() OVER (PARTITION BY c.cid
-        ORDER BY c.cn2 + s.s1n2 - 2 * {dot('c.cv', 's.s1v')}, m.sid1) AS rn
-    FROM cents c
-    JOIN c2s2 x ON x.cid = c.cid
-    JOIN s1map m ON m.sid2 = x.sid2
-    JOIN sup1 s ON s.sid1 = m.sid1) WHERE rn = 1
-), v2s2 AS (
-  SELECT vec_id, sid2 FROM (
-    SELECT base.vec_id, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY base.vec_id
-        ORDER BY base.in2 + sup2.s2n2 - 2 * {dot('base.qv', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM base CROSS JOIN sup2) WHERE rn = 1
-), v2s1 AS (
-  SELECT vec_id, sid2, sid1 FROM (
-    SELECT b.vec_id, v.sid2, m.sid1,
-      ROW_NUMBER() OVER (PARTITION BY b.vec_id
-        ORDER BY b.in2 + s.s1n2 - 2 * {dot('b.qv', 's.s1v')}, m.sid1) AS rn
-    FROM base b
-    JOIN v2s2 v ON v.vec_id = b.vec_id
-    JOIN s1map m ON m.sid2 = v.sid2
-    JOIN sup1 s ON s.sid1 = m.sid1) WHERE rn = 1
-)
-SELECT vec_id, sid2 AS super2_cid, sid1 AS super_cid, cid FROM (
-  SELECT b.vec_id, v.sid2, v.sid1, c.cid,
-    ROW_NUMBER() OVER (PARTITION BY b.vec_id
-      ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
-  FROM base b
-  JOIN v2s1 v ON v.vec_id = b.vec_id
-  JOIN c2s1 x ON x.sid1 = v.sid1
-  JOIN cents c ON c.cid = x.cid) WHERE rn = 1
-"""
+)"""]
+    for j, st in enumerate(_cascade_strides(n_centroids, supers)):
+        src = "base" if j == 0 else f"lv{depth - j + 1}"
+        pred = _fixed_sample_sql("vec_id", centroid_mod * st, counts[j])
+        ctes.append(f"lv{depth - j} AS (SELECT * FROM {src} WHERE {pred})")
+    for lj in range(1, depth + 1):
+        ctes += [_cascade_route_cte(f"m{lj}_{i}", f"lv{lj}", i,
+                                    f"m{lj}_{i - 1}") for i in range(lj)]
+    ctes += [_cascade_route_cte(
+        f"v{i}", "base", i, f"v{i - 1}",
+        keep="rn <= 2" if probe2 and i == depth - 1 else "rn = 1")
+        for i in range(depth)]
+    keys = "".join(f"k{i}, " for i in range(depth))
+    if probe2:
+        ctes += [f"best AS (SELECT vec_id, {keys}rn FROM v{depth - 1} "
+                 f"WHERE rn = 1)",
+                 f"second AS (SELECT vec_id, {keys}rn FROM v{depth - 1} "
+                 f"WHERE rn = 2)",
+                 _cascade_route_cte("alt", "base", depth, "second")]
+    prev = "best" if probe2 else f"v{depth - 1}"
+    ctes.append(_cascade_route_cte(f"v{depth}", "base", depth, prev))
+    out = ", ".join(f"b.k{i} AS {n}"
+                    for i, n in enumerate(_cascade_key_names(depth)))
+    tail = (f", COALESCE(a.k{depth}, -1) AS cid2 FROM v{depth} b "
+            f"LEFT JOIN alt a ON a.vec_id = b.vec_id" if probe2
+            else f" FROM v{depth} b")
+    return "\nWITH " + ",\n".join(ctes) + f"\nSELECT b.vec_id, {out}{tail}\n"
+
+
+def _cascade_query(supers: tuple, nprobe: int = 1):
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
+        out = ivf_assign_cascade(emb, supers=supers, nprobe=nprobe)
+        # cid2 coalesced to -1 on both engines: a nullable int column
+        # round-trips through pandas as float64 only when nulls are
+        # present, so the stringified canon would depend on WHETHER any
+        # parent cell happens to hold a single child — the sentinel
+        # keeps the column int64 always
+        return (out.withColumn("cid2", F.coalesce(F.col("cid2"), F.lit(-1)))
+                if nprobe == 2 else out)
+    return query
 
 
 register(QuerySpec(
-    "similarity_ivf_three_level", similarity_ivf_three_level_query,
-    _three_level_sql(),
+    "similarity_ivf_two_level", _cascade_query((N_SUPER,)),
+    _cascade_sql((N_SUPER,)),
+    description=f"hierarchical IVF coarse assignment through {N_SUPER} "
+                "super-cells: N·sqrt(k) build instead of N·k — the "
+                "production-codebook (10^4-10^5 lists) assignment path"))
+
+register(QuerySpec(
+    "similarity_ivf_three_level", _cascade_query((N_SUPER, N_SUPER2)),
+    _cascade_sql((N_SUPER, N_SUPER2)),
     description=f"three-level IVF coarse assignment through {N_SUPER2} "
                 f"super²- and {N_SUPER} super-cells: N·k^(1/3) build — "
                 "moves the kNN-graph codebook balance to k ∝ N^(3/4), "
                 "making build AND cell scoring N^(5/4) (the r10 sf100 "
                 "N^(4/3) asymptote fix)"))
 
-
-def similarity_three_level_probe2_query(spark: SparkSession,
-                                        sf_dir: str) -> DataFrame:
-    emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    # cid2 coalesced to -1 on both engines: a nullable int column
-    # round-trips through pandas as float64 only when nulls are present,
-    # so the stringified canon would depend on WHETHER any sid2 happens
-    # to hold a single sid1 — the sentinel keeps the column int64 always
-    return (ivf_assign_three_level(emb, nprobe=2)
-            .withColumn("cid2", F.coalesce(F.col("cid2"), F.lit(-1))))
-
-
-def _three_level_probe2_sql(centroid_mod: int = CENTROID_MOD,
-                            n_centroids: int = N_CENTROIDS,
-                            n_super: int = N_SUPER,
-                            n_super2: int = N_SUPER2) -> str:
-    """Level-by-level pin of the nprobe=2 cascade at the static stride
-    configuration — identical prefix to :func:`_three_level_sql` through
-    ``v2s2``, then the sid1 ranking keeps rn <= 2 and the cid argmin
-    runs inside BOTH cells."""
-    stride1 = max(1, n_centroids // n_super)
-    stride2 = max(1, n_super // n_super2)
-    dot = lambda a, b: (f"list_sum(list_transform(range(1, {DIM + 1}), "
-                        f"i -> {a}[i] * {b}[i]))")
-    return f"""
-WITH q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
-base AS (
-  SELECT vec_id, qv,
-    list_sum(list_transform(range(1, {DIM + 1}), i -> qv[i] * qv[i])) AS in2
-  FROM q
-), cents AS (
-  SELECT vec_id AS cid, qv AS cv, in2 AS cn2 FROM base
-  WHERE {_fixed_sample_sql('vec_id', centroid_mod, n_centroids)}
-), sup1 AS (
-  SELECT cid AS sid1, cv AS s1v, cn2 AS s1n2 FROM cents
-  WHERE {_fixed_sample_sql('cid', centroid_mod * stride1, n_super)}
-), sup2 AS (
-  SELECT sid1 AS sid2, s1v AS s2v, s1n2 AS s2n2 FROM sup1
-  WHERE {_fixed_sample_sql('sid1', centroid_mod * stride1 * stride2,
-                           n_super2)}
-), s1map AS (
-  SELECT sid1, sid2 FROM (
-    SELECT sup1.sid1, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY sup1.sid1
-        ORDER BY sup1.s1n2 + sup2.s2n2 - 2 * {dot('sup1.s1v', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM sup1 CROSS JOIN sup2) WHERE rn = 1
-), c2s2 AS (
-  SELECT cid, sid2 FROM (
-    SELECT cents.cid, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY cents.cid
-        ORDER BY cents.cn2 + sup2.s2n2 - 2 * {dot('cents.cv', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM cents CROSS JOIN sup2) WHERE rn = 1
-), c2s1 AS (
-  SELECT cid, sid1 FROM (
-    SELECT c.cid, m.sid1,
-      ROW_NUMBER() OVER (PARTITION BY c.cid
-        ORDER BY c.cn2 + s.s1n2 - 2 * {dot('c.cv', 's.s1v')}, m.sid1) AS rn
-    FROM cents c
-    JOIN c2s2 x ON x.cid = c.cid
-    JOIN s1map m ON m.sid2 = x.sid2
-    JOIN sup1 s ON s.sid1 = m.sid1) WHERE rn = 1
-), v2s2 AS (
-  SELECT vec_id, sid2 FROM (
-    SELECT base.vec_id, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY base.vec_id
-        ORDER BY base.in2 + sup2.s2n2 - 2 * {dot('base.qv', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM base CROSS JOIN sup2) WHERE rn = 1
-), v2s1r AS (
-  SELECT vec_id, sid2, sid1, rn FROM (
-    SELECT b.vec_id, v.sid2, m.sid1,
-      ROW_NUMBER() OVER (PARTITION BY b.vec_id
-        ORDER BY b.in2 + s.s1n2 - 2 * {dot('b.qv', 's.s1v')}, m.sid1) AS rn
-    FROM base b
-    JOIN v2s2 v ON v.vec_id = b.vec_id
-    JOIN s1map m ON m.sid2 = v.sid2
-    JOIN sup1 s ON s.sid1 = m.sid1) WHERE rn <= 2
-), best AS (SELECT vec_id, sid2, sid1 FROM v2s1r WHERE rn = 1),
-second AS (SELECT vec_id, sid1 FROM v2s1r WHERE rn = 2),
-cid_best AS (
-  SELECT vec_id, sid2, sid1, cid FROM (
-    SELECT v.vec_id, v.sid2, v.sid1, c.cid,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
-    FROM best v
-    JOIN base b ON b.vec_id = v.vec_id
-    JOIN c2s1 x ON x.sid1 = v.sid1
-    JOIN cents c ON c.cid = x.cid) WHERE rn = 1
-), cid_second AS (
-  SELECT vec_id, cid AS cid2 FROM (
-    SELECT v.vec_id, c.cid,
-      ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
-    FROM second v
-    JOIN base b ON b.vec_id = v.vec_id
-    JOIN c2s1 x ON x.sid1 = v.sid1
-    JOIN cents c ON c.cid = x.cid) WHERE rn = 1
-)
-SELECT cb.vec_id, cb.sid2 AS super2_cid, cb.sid1 AS super_cid, cb.cid,
-  COALESCE(cs.cid2, -1) AS cid2
-FROM cid_best cb LEFT JOIN cid_second cs ON cs.vec_id = cb.vec_id
-"""
-
-
 register(QuerySpec(
-    "similarity_ivf_three_level_probe2", similarity_three_level_probe2_query,
-    _three_level_probe2_sql(),
+    "similarity_ivf_three_level_probe2",
+    _cascade_query((N_SUPER, N_SUPER2), nprobe=2),
+    _cascade_sql((N_SUPER, N_SUPER2), probe2=True),
     description="nprobe=2 on the three-level cascade: the runner-up "
                 "super-cell at the LAST routing level is probed too and "
                 "the cid argmin runs inside both — the scaled path's "
@@ -3624,9 +3372,7 @@ def similarity_knn_pagerank_query(spark: SparkSession, sf_dir: str) -> DataFrame
     representativeness signal data-selection pipelines rank by (central
     docs summarize their semantic neighborhood). Top-N by rank."""
     emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    mod, k, s1, s2, ev = scaled_codebook_three_level(emb.count())
-    graph = knn_graph(emb, centroid_mod=mod, n_centroids=k, n_super=s1,
-                      n_super2=s2, spread_every=ev).select(
+    graph = knn_graph(emb, **_graph_codebook(emb.count())).select(
         F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst"))
     pr = graph_pagerank(graph)
     return (pr.orderBy(F.col("rank").desc(), F.col("id"))
@@ -4552,8 +4298,7 @@ def knn_classify_confusion(emb: DataFrame, id_col: str = "vec_id",
                            k: int = KNN_K,
                            centroid_mod: int = CENTROID_MOD,
                            n_centroids: int = N_CENTROIDS,
-                           n_super: int | None = None,
-                           n_super2: int | None = None,
+                           supers: tuple | None = None,
                            spread_every: int | None = None) -> DataFrame:
     """Leave-one-out kNN classification over the labeled embedding
     corpus: each vector's predicted label is the majority vote of its
@@ -4571,8 +4316,7 @@ def knn_classify_confusion(emb: DataFrame, id_col: str = "vec_id",
     |labels|²-bounded.
     """
     g = knn_graph(emb, id_col, vec_col, k, centroid_mod, n_centroids,
-                  nprobe=1, n_super=n_super, n_super2=n_super2,
-                  spread_every=spread_every)
+                  nprobe=1, supers=supers, spread_every=spread_every)
     nb_labels = emb.select(F.col(id_col).alias("neighbor_id"),
                            F.col(label_col).cast("int").alias("nb_label"))
     votes = (g.join(nb_labels, "neighbor_id")
@@ -4593,10 +4337,7 @@ def knn_classify_confusion(emb: DataFrame, id_col: str = "vec_id",
 def similarity_knn_classify_query(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    mod, k, s1, s2, ev = scaled_codebook_three_level(emb.count())
-    return knn_classify_confusion(emb, centroid_mod=mod, n_centroids=k,
-                                  n_super=s1, n_super2=s2,
-                                  spread_every=ev)
+    return knn_classify_confusion(emb, **_graph_codebook(emb.count()))
 
 
 def _knn_classify_sql() -> str:
@@ -5499,9 +5240,7 @@ def similarity_hubness_query(spark: SparkSession,
     # size the codebook exactly like the registered graph query — the
     # FIXED default codebook is the quadratic cell-self-join trap the
     # sf1 ladder catches (21.6x measured before this sizing was added)
-    mod, k, s1, s2, ev = scaled_codebook_three_level(emb.count())
-    return knn_hubness(emb, centroid_mod=mod, n_centroids=k, n_super=s1,
-                       n_super2=s2, spread_every=ev)
+    return knn_hubness(emb, **_graph_codebook(emb.count()))
 
 
 def _hubness_sql() -> str:
@@ -5632,9 +5371,7 @@ def knn_triangles(emb: DataFrame, id_col: str = "vec_id",
 def similarity_triangles_query(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
-    mod, k, s1, s2, ev = scaled_codebook_three_level(emb.count())
-    return knn_triangles(emb, centroid_mod=mod, n_centroids=k,
-                         n_super=s1, n_super2=s2, spread_every=ev)
+    return knn_triangles(emb, **_graph_codebook(emb.count()))
 
 
 def _triangles_sql() -> str:
@@ -6392,8 +6129,7 @@ def semantic_pair_recall(emb: DataFrame, id_col: str = "vec_id",
                          tau: float = SEM_TAU,
                          centroid_mod: int = CENTROID_MOD,
                          n_centroids: int = N_CENTROIDS,
-                         n_super: int | None = None,
-                         n_super2: int | None = None,
+                         supers: tuple | None = None,
                          spread_every: int | None = None,
                          query_every: int = KNN_RECALL_EVERY,
                          query_hash: bool = False) -> DataFrame:
@@ -6424,8 +6160,7 @@ def semantic_pair_recall(emb: DataFrame, id_col: str = "vec_id",
                          * F.sqrt(F.col("n2").cast("double")))) >= tau)
              .select("query_id", F.col(id_col).alias("partner_id")))
     assigned = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
-                                n_centroids, n_super, n_super2,
-                                spread_every)
+                                n_centroids, supers, spread_every)
     pairs = semantic_pairs_from_assigned(assigned, id_col, tau)
     got = (pairs.select(F.col("id_a").alias("query_id"),
                         F.col("id_b").alias("partner_id"))
@@ -6519,14 +6254,13 @@ def semantic_survivors(emb: DataFrame, id_col: str = "vec_id",
                        vec_col: str = "embedding", tau: float = SEM_TAU,
                        centroid_mod: int = CENTROID_MOD,
                        n_centroids: int = N_CENTROIDS,
-                       n_super: int | None = None,
-                       n_super2: int | None = None,
+                       supers: tuple | None = None,
                        spread_every: int | None = None) -> DataFrame:
     """Ids KEPT by one SemDeDup pass (keep-min within >= tau cell
     pairs) — zero-norm vectors pass through untouched (they have no
     defined cosine, so no pair can remove them)."""
     base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
-                            n_centroids, n_super, n_super2, spread_every)
+                            n_centroids, supers, spread_every)
     removed = (semantic_pairs_from_assigned(base, id_col, tau)
                .select(F.col("id_b").alias(id_col)).distinct())
     return emb.select(F.col(id_col)).join(removed, id_col, "left_anti")
@@ -6537,21 +6271,19 @@ def semantic_dedup_iterated(emb: DataFrame, id_col: str = "vec_id",
                             tau: float = SEM_TAU,
                             schedule=None) -> DataFrame:
     """Two-pass SemDeDup summary: (n_input, n_removed_p1, n_removed_p2,
-    n_kept). ``schedule`` maps a row count to the 5-tuple codebook
+    n_kept). ``schedule`` maps a row count to the
+    (centroid_mod, n_centroids, supers, spread_every) codebook
     configuration (default :func:`scaled_codebook_three_level`) and is
     re-evaluated on the PASS-2 corpus — the survivors — which is what
     reunites the shards of a shattered duplicate group.
     """
     sched = schedule or scaled_codebook_three_level
     n0 = emb.count()
-    mod, k, s1, s2, ev = sched(n0)
-    surv1 = semantic_survivors(emb, id_col, vec_col, tau, mod, k,
-                               s1, s2, ev).localCheckpoint()
+    surv1 = semantic_survivors(emb, id_col, vec_col, tau,
+                               *sched(n0)).localCheckpoint()
     n1 = surv1.count()
     emb2 = emb.join(surv1, id_col).localCheckpoint()
-    mod2, k2, s12, s22, ev2 = sched(n1)
-    surv2 = semantic_survivors(emb2, id_col, vec_col, tau, mod2, k2,
-                               s12, s22, ev2)
+    surv2 = semantic_survivors(emb2, id_col, vec_col, tau, *sched(n1))
     n2 = surv2.count()
     return emb.sparkSession.createDataFrame(
         [(n0, n0 - n1, n1 - n2, n2)],
@@ -6666,9 +6398,8 @@ def semantic_dedup_converged(emb: DataFrame, id_col: str = "vec_id",
     cur, n_cur = emb, n_input
     removed: list = []
     for _ in range(max_passes):
-        mod, k, s1, s2, ev = sched(n_cur)
-        surv = semantic_survivors(cur, id_col, vec_col, tau, mod, k,
-                                  s1, s2, ev).localCheckpoint()
+        surv = semantic_survivors(cur, id_col, vec_col, tau,
+                                  *sched(n_cur)).localCheckpoint()
         n_new = surv.count()
         removed.append(n_cur - n_new)
         if n_new == n_cur:
@@ -6781,7 +6512,7 @@ def ann_index_build(emb: DataFrame, path: str, id_col: str = "vec_id",
                     vec_col: str = "embedding",
                     centroid_mod: int = CENTROID_MOD,
                     n_centroids: int = N_CENTROIDS,
-                    n_super: int = None, n_super2: int = None,
+                    supers: tuple = None,
                     spread_every: int = None) -> None:
     """Materialize the IVF index: coarse assignment + quantized vectors,
     cid-partitioned (the inverted-list layout). The codebook itself is
@@ -6789,24 +6520,24 @@ def ann_index_build(emb: DataFrame, path: str, id_col: str = "vec_id",
     be assigned against the BUILD's centroids — re-deriving them from a
     changed corpus would silently re-key every existing list.
 
-    ``n_super``/``n_super2``/``spread_every``: when given, the build's
-    assignment pass routes through the THREE-level hierarchical
-    quantizer instead of the flat N·k argmin — the serve-path twin of
+    ``supers``/``spread_every``: when given, the build's assignment
+    pass routes through every level of the hierarchical cascade
+    (:func:`ivf_assign_cascade`) instead of the flat N·k argmin — with
+    the graph family's two super levels, the serve-path twin of
     the graph family's schedule. This is the fix for the wall the r13
     serve-recall ladder measured: under the scaled codebook k ∝ √N the
     flat build is N^1.5 work (a single >30-minute stage at 2M vectors),
     while the routed build is N·3k^(1/3). With the degenerate-exact
-    static configuration (``n_super == n_super2 == n_centroids``,
+    static configuration (``supers == (n_centroids, n_centroids)``,
     ``spread_every=None``) the routed build produces BYTE-IDENTICAL
     lists to the flat build (unit-pinned), so the fixed SQL oracles
     stay valid. The serve side is unchanged either way — it reads only
     ``lists/``."""
     # the *_cols assignment variants carry (qv, n2) on the same
     # projected row — no corpus-wide id join before the list write (r13)
-    if n_super is not None:
-        cols = _ivf_assign_three_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
-            n_super2 if n_super2 is not None else n_super,
+    if supers is not None:
+        cols = _ivf_assign_cascade_cols(
+            emb, id_col, vec_col, centroid_mod, n_centroids, supers,
             spread_every)
     else:
         cols = _ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
@@ -7063,8 +6794,8 @@ register(QuerySpec(
 def similarity_index_routed_query(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """The hierarchical-build serve path at the degenerate-exact static
-    configuration: routing through the three-level quantizer with
-    n_super == n_super2 == k produces byte-identical lists to the flat
+    configuration: routing through the three-level cascade with
+    supers == (k, k) produces byte-identical lists to the flat
     build, so the inline searcher's oracle applies verbatim — the same
     exactness contract every scaled-path operator in this family pins
     at oracle scale."""
@@ -7074,8 +6805,7 @@ def similarity_index_routed_query(spark: SparkSession,
     emb = load_table_parallel(spark, sf_dir, "embeddings", key="vec_id")
     base = tempfile.mkdtemp(prefix="dcd_annrouted_")
     try:
-        ann_index_build(emb, base, n_super=N_CENTROIDS,
-                        n_super2=N_CENTROIDS)
+        ann_index_build(emb, base, supers=(N_CENTROIDS, N_CENTROIDS))
         return ann_index_search(
             spark, base, expect_centroid_mod=CENTROID_MOD,
             expect_n_centroids=N_CENTROIDS).localCheckpoint()
@@ -7335,17 +7065,17 @@ def knn_graph_persist(emb: DataFrame, path: str, id_col: str = "vec_id",
                       centroid_mod: int = CENTROID_MOD,
                       n_centroids: int = N_CENTROIDS, nprobe: int = 2,
                       n_buckets: int = GRAPH_BUCKETS,
-                      n_super: int = None, n_super2: int = None,
+                      supers: tuple = None,
                       spread_every: int = None) -> None:
     """Materialize the kNN graph for serving: adjacency + inline
     neighbor vectors, bucket-partitioned on the source id. ``meta/``
     records the build configuration (k, nprobe, n_buckets) — the
     searcher validates it at serve time, same discipline as the IVF
-    index. Pass the three-level routing args above the flat wall,
-    exactly as for :func:`knn_graph`."""
+    index. Pass the cascade's ``supers`` above the flat wall, exactly
+    as for :func:`knn_graph`."""
     edges = knn_graph(emb, id_col=id_col, vec_col=vec_col, k=k,
                       centroid_mod=centroid_mod, n_centroids=n_centroids,
-                      nprobe=nprobe, n_super=n_super, n_super2=n_super2,
+                      nprobe=nprobe, supers=supers,
                       spread_every=spread_every)
     nbr = (emb.select(F.col(id_col).alias("neighbor_id"),
                       quantize(F.col(vec_col)).alias("nq"),

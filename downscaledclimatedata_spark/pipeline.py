@@ -41,7 +41,7 @@ from downscaledclimatedata_spark.operators.dedup import (
     DECON_NGRAM, contaminated_doc_ids, lsh_candidate_pairs,
     minhash_signatures, prune_corpus, prune_corpus_quality)
 from downscaledclimatedata_spark.operators.prep import (
-    MIX_ACCEPT_MOD, clean_documents, global_shuffle,
+    MIX_ACCEPT_MOD, clean_documents, domain_mixture_sample, global_shuffle,
     observed, observed_get, quality_filter, write_training_shards)
 
 
@@ -238,7 +238,10 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     # (and the oracle's); the acceptance filter then folds into the
     # shard write's scan as a literal map lookup instead of a broadcast
     # hash join (a doc whose source is missing/NULL maps to NULL and is
-    # dropped, exactly like the former inner join).
+    # dropped, exactly like the former inner join). The operator
+    # multiplies in bigint: once a product reaches 2^63 it wraps (or
+    # aborts under ANSI) where exact Python ints would not, so there the
+    # builder joins the operator's own rates instead.
     import math
 
     from downscaledclimatedata_spark.functions.text import WS_RE
@@ -259,25 +262,40 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     ws = {r["source"]: int(math.floor(math.sqrt(float(r["tok_s"]))))
           for r in stats}
     total_w = sum(ws.values())
-    rate_of = {}
-    for r in stats:
-        if r["source"] is None:
-            continue
-        denom = float(total_w * r["tok_s"])
-        num = float(budget_tokens * ws[r["source"]])
-        # denom 0 (an all-empty-token source): the operator's 0.0/0.0
-        # is NaN and least(1.0, NaN) = 1.0 under Spark's NaN-is-largest
-        rate_of[r["source"]] = 1.0 if denom == 0.0 else min(1.0, num / denom)
     accept = (md5_long(F.col(id_col).cast("string"), seed=f"{seed}-mix:")
               % MIX_ACCEPT_MOD)
-    if rate_of:
-        rate_col = F.create_map(
-            *[x for s, r in sorted(rate_of.items())
-              for x in (F.lit(s), F.lit(r))])[F.col(source_col)]
+    products = ([budget_tokens * w for w in ws.values()]
+                + [total_w * r["tok_s"] for r in stats])
+    if max(products, default=0) >= 2 ** 63:
+        rates = domain_mixture_sample(
+            deduped, budget_tokens, source_col, text_col, id_col,
+            seed=f"{seed}-mix").select(F.col("source").alias("_mix_source"),
+                                       F.col("rate").alias("_mix_rate"))
+        sampled = (deduped.join(F.broadcast(rates),
+                                F.col(source_col) == F.col("_mix_source"))
+                   .filter(accept.cast("double")
+                           < F.col("_mix_rate") * MIX_ACCEPT_MOD)
+                   .drop("_mix_source", "_mix_rate"))
     else:
-        rate_col = F.lit(None).cast("double")
-    sampled = deduped.filter(
-        accept.cast("double") < rate_col * MIX_ACCEPT_MOD)
+        rate_of = {}
+        for r in stats:
+            if r["source"] is None:
+                continue
+            denom = float(total_w * r["tok_s"])
+            num = float(budget_tokens * ws[r["source"]])
+            # denom 0 (an all-empty-token source): the operator's
+            # 0.0/0.0 is NaN and least(1.0, NaN) = 1.0 under Spark's
+            # NaN-is-largest
+            rate_of[r["source"]] = (1.0 if denom == 0.0
+                                    else min(1.0, num / denom))
+        if rate_of:
+            rate_col = F.create_map(
+                *[x for s, r in sorted(rate_of.items())
+                  for x in (F.lit(s), F.lit(r))])[F.col(source_col)]
+        else:
+            rate_col = F.lit(None).cast("double")
+        sampled = deduped.filter(
+            accept.cast("double") < rate_col * MIX_ACCEPT_MOD)
 
     cleaned = clean_documents(sampled, text_col, id_col,
                               keep_cols=(source_col,))

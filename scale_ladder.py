@@ -404,12 +404,12 @@ def measure_serve_recall(spark, sf_dir: str, n_queries: int = 100,
         # build wall — the configuration that makes 2M+ feasible
         from downscaledclimatedata_spark.operators.similarity import (
             scaled_codebook_three_level)
-        m3, k3, s1, s2, ev = scaled_codebook_three_level(n)
+        m3, k3, supers, ev = scaled_codebook_three_level(n)
         t0 = _t.perf_counter()
         idx = tempfile.mkdtemp(prefix="dcd_serveidx3_")
         try:
             ann_index_build(emb, idx, centroid_mod=m3, n_centroids=k3,
-                            n_super=s1, n_super2=s2, spread_every=ev)
+                            supers=supers, spread_every=ev)
             r, q = _recall(truth_cos, ann_index_search(
                 spark, idx, k=k, query_mod=q_every,
                 n_queries=n_queries))
@@ -418,8 +418,7 @@ def measure_serve_recall(spark, sf_dir: str, n_queries: int = 100,
         out["index_serve_routed"] = {
             "mean_recall": round(r, 4), "queries": q,
             "codebook": {"centroid_mod": m3, "n_centroids": k3,
-                         "n_super": s1, "n_super2": s2,
-                         "spread_every": ev},
+                         "supers": list(supers), "spread_every": ev},
             "sec": round(_t.perf_counter() - t0, 1)}
     if "graph_search" in methods:
         # graph-expansion serving (r13): IVF probe-1 seeds under the
@@ -429,11 +428,10 @@ def measure_serve_recall(spark, sf_dir: str, n_queries: int = 100,
         # is the measured per-decade single-probe decay
         from downscaledclimatedata_spark.operators.similarity import (
             graph_search, knn_graph, scaled_codebook_three_level)
-        m3, k3, s1, s2, ev = scaled_codebook_three_level(n)
+        m3, k3, supers, ev = scaled_codebook_three_level(n)
         t0 = _t.perf_counter()
         edges = knn_graph(emb, centroid_mod=m3, n_centroids=k3,
-                          n_super=s1, n_super2=s2, spread_every=ev,
-                          nprobe=2)
+                          supers=supers, spread_every=ev, nprobe=2)
         r, q = _recall(truth_cos, graph_search(
             emb, edges=edges, k=k, query_mod=q_every,
             n_queries=n_queries, centroid_mod=mod, n_centroids=kc))
@@ -441,7 +439,7 @@ def measure_serve_recall(spark, sf_dir: str, n_queries: int = 100,
             "mean_recall": round(r, 4), "queries": q,
             "seed_codebook": {"centroid_mod": mod, "n_centroids": kc},
             "graph_codebook": {"centroid_mod": m3, "n_centroids": k3,
-                               "n_super": s1, "n_super2": s2,
+                               "supers": list(supers),
                                "spread_every": ev},
             "sec": round(_t.perf_counter() - t0, 1)}
     return out
@@ -465,15 +463,15 @@ def measure_recall(spark, sf_dir: str, n_queries: int = RECALL_QUERIES) -> dict:
         knn_graph_recall, scaled_codebook_three_level)
     emb = _load_emb(spark, sf_dir)
     n = emb.count()
-    mod, k, s1, s2, ev = scaled_codebook_three_level(n)
+    mod, k, supers, ev = scaled_codebook_three_level(n)
     out = {"n_vectors": n,
            "codebook": {"centroid_mod": mod, "n_centroids": k,
-                        "n_super": s1, "n_super2": s2, "spread_every": ev}}
+                        "supers": list(supers), "spread_every": ev}}
     for nprobe in (1, 2):
         t0 = _t.perf_counter()
         agg = (knn_graph_recall(
             emb, nprobe=nprobe, centroid_mod=mod, n_centroids=k,
-            n_super=s1, n_super2=s2, spread_every=ev,
+            supers=supers, spread_every=ev,
             query_every=max(1, n // n_queries), query_hash=True)
             .agg(F.count(F.lit(1)).alias("q"),
                  F.avg("recall").alias("mean"),
@@ -502,12 +500,12 @@ def measure_sem_recall(spark, sf_dir: str,
     from downscaledclimatedata_spark.operators.similarity import SEM_TAU
     emb = _load_emb(spark, sf_dir)
     n = emb.count()
-    mod, k, s1, s2, ev = scaled_codebook_three_level(n)
+    mod, k, supers, ev = scaled_codebook_three_level(n)
     t0 = _t.perf_counter()
     agg = (semantic_pair_recall(
         emb, tau=(SEM_TAU if tau is None else tau),
-        centroid_mod=mod, n_centroids=k, n_super=s1, n_super2=s2,
-        spread_every=ev, query_every=max(1, n // n_queries),
+        centroid_mod=mod, n_centroids=k, supers=supers, spread_every=ev,
+        query_every=max(1, n // n_queries),
         query_hash=True)
         .agg(F.count(F.lit(1)).alias("q"),
              F.avg("recall").alias("mean"),
@@ -515,8 +513,7 @@ def measure_sem_recall(spark, sf_dir: str,
              F.sum("n_hit").alias("nh")).first())
     return {"n_vectors": n,
             "codebook": {"centroid_mod": mod, "n_centroids": k,
-                         "n_super": s1, "n_super2": s2,
-                         "spread_every": ev},
+                         "supers": list(supers), "spread_every": ev},
             "queries_with_truth": int(agg["q"]),
             "mean_recall": round(float(agg["mean"]), 4),
             "truth_pairs": int(agg["nt"]), "hit_pairs": int(agg["nh"]),
@@ -541,13 +538,11 @@ def time_knn_ab(spark, sf_dir: str) -> dict:
         scaled_codebook_two_level)
     emb = _load_emb(spark, sf_dir)
     n = emb.count()
-    m2, k2, s2 = scaled_codebook_two_level(n)
-    m3, k3, s31, s32, ev3 = scaled_codebook_three_level(n)
     configs = {
-        "two_level": dict(centroid_mod=m2, n_centroids=k2, n_super=s2),
-        "three_level": dict(centroid_mod=m3, n_centroids=k3, n_super=s31,
-                            n_super2=s32, spread_every=ev3),
-    }
+        name: dict(zip(("centroid_mod", "n_centroids", "supers",
+                        "spread_every"), sched(n)))
+        for name, sched in (("two_level", scaled_codebook_two_level),
+                            ("three_level", scaled_codebook_three_level))}
     out: dict = {"n_vectors": n}
     walls = {name: [] for name in configs}
     for _ in range(2):  # interleaved: A B A B

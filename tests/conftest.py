@@ -43,6 +43,16 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
 
 
+def pytest_terminal_summary(terminalreporter, config):
+    if "slow" not in (config.getoption("markexpr") or ""):
+        return  # e.g. -m "": nothing was deselected for being slow
+    n = sum(1 for item in terminalreporter.stats.get("deselected", [])
+            if item.get_closest_marker("slow"))
+    if n:
+        terminalreporter.write_line(
+            f'{n} slow tests deselected; run `-m ""` for the full gate')
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import glob
 
+import pytest
+
 from downscaledclimatedata_spark.operators.prep import quality_filter
 from downscaledclimatedata_spark.pipeline import build_training_corpus
 from downscaledclimatedata_spark.sources.tables import load_table
@@ -276,3 +278,74 @@ def test_build_audited_publish_gates_and_preserves_prior(spark, tmp_path):
     assert os.path.exists(rep2["staging"])          # kept for inspection
     # the prior epoch's corpus is still what readers see
     assert spark.read.parquet(out).count() == res1.n_sampled
+
+
+def test_mixture_fold_overflow_takes_relational_rates(spark, tmp_path,
+                                                      monkeypatch):
+    """Once a rate product reaches 2^63, domain_mixture_sample's bigint
+    multiplies wrap (ANSI off) or abort (ANSI on) where the driver
+    fold's exact Python ints would not: the builder must then sample
+    with the operator's own rates, so its rows are the operator's."""
+    import downscaledclimatedata_spark.pipeline as pl
+
+    summaries = []
+    real = pl.domain_mixture_sample
+
+    def spy(*args, **kwargs):
+        summaries.append(real(*args, **kwargs))
+        return summaries[-1]
+
+    monkeypatch.setattr(pl, "domain_mixture_sample", spy)
+    docs = load_table(spark, SF_SMOKE, "documents")
+    out = str(tmp_path / "shards")
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")  # products wrap
+    try:
+        res = build_training_corpus(docs, out, budget_tokens=2 ** 62,
+                                    n_shards=2)
+        assert len(summaries) == 1  # the relational path was taken
+        want = {r.source: r.n_sampled for r in summaries[0].collect()
+                if r.source is not None and r.n_sampled}
+        got = {r.source: r["count"] for r in
+               spark.read.parquet(out).groupBy("source").count().collect()}
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert got == want
+    assert res.n_sampled == sum(want.values())
+    # the exact fold would accept every deduped doc (rate 1.0 for all)
+    assert res.n_sampled < res.n_after_dedup
+
+
+@pytest.mark.parametrize("audited", [False, True])
+def test_shard_write_input_is_clustered_on_shard(spark, tmp_path,
+                                                 monkeypatch, audited):
+    """Both clustered=True call sites hand write_training_shards a
+    relation already hash-partitioned on the shard column — the contract
+    that lets the writer skip its own repartition: the topmost Exchange
+    of the write input (the first one the plan tree prints) must be the
+    hashpartitioning on shard."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    import downscaledclimatedata_spark.pipeline as pl
+
+    plans = []
+    real = pl.write_training_shards
+
+    def spy(df, out_dir, **kwargs):
+        assert kwargs.get("clustered") is True
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, out_dir, **kwargs)
+
+    monkeypatch.setattr(pl, "write_training_shards", spy)
+    docs = load_table(spark, SF_SMOKE, "documents").limit(40)
+    audits = ([("v_null_text", F.col("content_text").isNull())]
+              if audited else None)
+    build_training_corpus(docs, str(tmp_path / "corpus"),
+                          budget_tokens=5_000, n_shards=2, audits=audits)
+    assert len(plans) == 1
+    top = next(ln for ln in plans[0].splitlines()
+               if re.search(r"\bExchange ", ln))
+    assert re.search(r"\bExchange hashpartitioning\(shard#\d+", top), \
+        plans[0]

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from downscaledclimatedata_spark.operators.similarity import (
-    ivf_assign_three_level, knn_graph, knn_graph_recall)
+    ivf_assign_cascade, knn_graph, knn_graph_recall)
 from downscaledclimatedata_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -86,9 +86,9 @@ def test_three_level_probe2_schema_and_disjoint_cells(spark):
     (each centroid maps to exactly one sid1, so the two probed cells
     are disjoint); nprobe=1 output is unchanged (4 columns)."""
     emb = load_table(spark, SF, "embeddings")
-    p1 = ivf_assign_three_level(emb)
+    p1 = ivf_assign_cascade(emb, supers=(4, 2))
     assert p1.columns == ["vec_id", "super2_cid", "super_cid", "cid"]
-    p2 = ivf_assign_three_level(emb, nprobe=2)
+    p2 = ivf_assign_cascade(emb, supers=(4, 2), nprobe=2)
     assert p2.columns == ["vec_id", "super2_cid", "super_cid", "cid",
                           "cid2"]
     rows = p2.collect()
@@ -103,7 +103,7 @@ def test_three_level_probe2_schema_and_disjoint_cells(spark):
 def test_three_level_probe2_nprobe_validated(spark):
     emb = load_table(spark, SF, "embeddings")
     with pytest.raises(ValueError, match="nprobe"):
-        ivf_assign_three_level(emb, nprobe=3)
+        ivf_assign_cascade(emb, supers=(4, 2), nprobe=3)
 
 
 def test_knn_graph_hierarchical_probe2_recall_on_clustered_data(spark):
@@ -118,7 +118,7 @@ def test_knn_graph_hierarchical_probe2_recall_on_clustered_data(spark):
     def recall(nprobe):
         got = {r["vec_id"]: r["neighbor_id"] for r in
                knn_graph(df, k=1, centroid_mod=8, n_centroids=16,
-                         n_super=4, n_super2=2, nprobe=nprobe).collect()}
+                         supers=(4, 2), nprobe=nprobe).collect()}
         return sum(1 for v in truth if got.get(v) == truth[v]) / len(truth)
 
     r1, r2 = recall(1), recall(2)
@@ -134,7 +134,7 @@ def test_knn_graph_hierarchical_probe2_spread_sampling(spark):
             for i, (vid, v) in enumerate(_clustered_rows(4, 16))]
     df = _emb(spark, rows)
     out = knn_graph(df, k=2, centroid_mod=1, n_centroids=16,
-                    n_super=6, n_super2=2, spread_every=4,
+                    supers=(6, 2), spread_every=4,
                     nprobe=2).collect()
     seen = set()
     for r in out:
@@ -242,21 +242,21 @@ def test_tiered_band_two_level_survives_offset_ids(spark):
     import random
 
     from downscaledclimatedata_spark.operators.similarity import (
-        ivf_assign_two_level, knn_graph, scaled_codebook_three_level)
+        ivf_assign_cascade, knn_graph, scaled_codebook_three_level)
     rnd = random.Random(41)
     n = 1700
     rows = [(5_000_000_000 + i,
              [rnd.uniform(-1, 1) for _ in range(64)]) for i in range(n)]
     df = _emb(spark, rows)
-    mod, k, s1, s2, ev = scaled_codebook_three_level(n)
-    assert s2 == s1 and ev is not None  # the band config under test
-    assign = ivf_assign_two_level(df, centroid_mod=mod, n_centroids=k,
-                                  n_super=s1, spread_every=ev).collect()
+    mod, k, supers, ev = scaled_codebook_three_level(n)
+    assert supers[1] == supers[0] and ev is not None  # the band config
+    assign = ivf_assign_cascade(df, centroid_mod=mod, n_centroids=k,
+                                supers=supers[:1], spread_every=ev).collect()
     assert len(assign) == n  # every vector assigned exactly once
     cells = {r["cid"] for r in assign}
     assert len(cells) > 10, len(cells)  # codebook sampled despite offset
-    out = knn_graph(df, centroid_mod=mod, n_centroids=k, n_super=s1,
-                    n_super2=s2, spread_every=ev).collect()
+    out = knn_graph(df, centroid_mod=mod, n_centroids=k, supers=supers,
+                    spread_every=ev).collect()
     assert len({r["vec_id"] for r in out}) > 0.9 * n
 
 
@@ -365,8 +365,8 @@ def test_semantic_dedup_iterated_reunites_shattered_groups(spark):
 
     def schedule(n):
         if n > 50:  # pass 1: ~24 hash-spread centroids -> ~8 per cluster
-            return (1, 24, 24, 24, 5)
-        return (1, 1, 1, 1, None)  # pass 2: single cell (vec 0 exists)
+            return (1, 24, (24, 24), 5)
+        return (1, 1, (1, 1), None)  # pass 2: single cell (vec 0 exists)
 
     r = semantic_dedup_iterated(df, tau=0.5, schedule=schedule).first()
     assert r["n_input"] == 120

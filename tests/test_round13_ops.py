@@ -178,10 +178,10 @@ def test_semantic_dedup_converged_multi_level_shattering(spark):
         def schedule(n):
             state["pass"] += 1
             if state["pass"] == 1:   # ~24 centroids -> ~8 per cluster
-                return (1, 24, 24, 24, 5)
+                return (1, 24, (24, 24), 5)
             if state["pass"] == 2:   # ~6 centroids -> ~2 per cluster
-                return (1, 6, 6, 6, max(1, n // 6))
-            return (1, 1, 1, 1, None)  # single cell: exact within-pass
+                return (1, 6, (6, 6), max(1, n // 6))
+            return (1, 1, (1, 1), None)  # single cell: exact within-pass
 
         return schedule
 
@@ -315,7 +315,7 @@ def test_ann_index_build_routed_degenerate_identity(spark, tmp_path):
     emb = load_table(spark, SF, "embeddings")
     flat, routed = str(tmp_path / "flat"), str(tmp_path / "routed")
     ann_index_build(emb, flat)
-    ann_index_build(emb, routed, n_super=16, n_super2=16)
+    ann_index_build(emb, routed, supers=(16, 16))
     lf = {(r.cid, r.id) for r in
           spark.read.parquet(f"{flat}/lists").collect()}
     lr = {(r.cid, r.id) for r in
@@ -338,10 +338,10 @@ def test_ann_index_build_routed_scheduled_serves(spark, tmp_path,
     emb = load_table_parallel(spark, clustered_dir, "embeddings",
                               key="vec_id")
     n = emb.count()
-    mod, k, s1, s2, ev = scaled_codebook_three_level(n)
+    mod, k, supers, ev = scaled_codebook_three_level(n)
     base = str(tmp_path / "idx")
     ann_index_build(emb, base, centroid_mod=mod, n_centroids=k,
-                    n_super=s1, n_super2=s2, spread_every=ev)
+                    supers=supers, spread_every=ev)
     served = ann_index_search(spark, base, query_mod=n // 100,
                               n_queries=100)
     plan = served._jdf.queryExecution().executedPlan().toString()

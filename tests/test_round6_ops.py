@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from downscaledclimatedata_spark.operators.dedup import boilerplate_strip, paragraph_dedup
@@ -21,6 +22,7 @@ from downscaledclimatedata_spark.operators.prep import (
 from downscaledclimatedata_spark.operators.similarity import (
     knn_graph, semantic_dedup)
 from downscaledclimatedata_spark.operators.textops import bm25_topk
+from tests.conftest import SF_CORRECTNESS
 
 
 def _docs(spark, rows):
@@ -324,30 +326,49 @@ def test_mixture_rates_match_python_reference(spark, sizes, budget):
         assert out[src]["tok_s"] == t
 
 
-# --- ivf_assign_two_level -------------------------------------------------------
+# --- ivf_assign_cascade ---------------------------------------------------------
 
-def test_two_level_degenerates_to_flat_when_all_super(spark):
-    """With n_super == n_centroids every centroid is its own super-cell
-    root, so the hierarchical route must reproduce flat assignment
-    EXACTLY (each centroid maps to itself at level 1, and level 2
-    scans... the same codebook)."""
+@pytest.mark.parametrize("supers,seed", [((8,), 3), ((8, 8), 11)],
+                         ids=["two_level", "three_level"])
+def test_cascade_degenerates_to_flat_when_all_super(spark, supers, seed):
+    """With every super level equal to n_centroids each centroid is its
+    own cell at every level, so hierarchical routing must reproduce flat
+    assignment EXACTLY at any depth (the canon-scale guarantee)."""
     import random
     from downscaledclimatedata_spark.operators.similarity import (
-        ivf_assign, ivf_assign_two_level)
-    rnd = random.Random(3)
+        ivf_assign, ivf_assign_cascade)
+    rnd = random.Random(seed)
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(64)]) for i in range(80)]
     df = _emb(spark, rows)
     flat = {r["vec_id"]: r["cid"]
             for r in ivf_assign(df, centroid_mod=10, n_centroids=8).collect()}
-    two = {r["vec_id"]: r["cid"]
-           for r in ivf_assign_two_level(df, centroid_mod=10, n_centroids=8,
-                                         n_super=8).collect()}
-    assert two == flat
+    routed = {r["vec_id"]: r["cid"]
+              for r in ivf_assign_cascade(df, centroid_mod=10, n_centroids=8,
+                                          supers=supers).collect()}
+    assert routed == flat
+
+
+@pytest.mark.parametrize("nprobe", [1, 2])
+def test_cascade_sql_matches_engine_beyond_registered_depths(spark, duck,
+                                                            nprobe):
+    """The oracle template and the Arrow router are depth-generic: at
+    four levels (k=16 -> 8 -> 4 -> 2, deeper than any registered spec)
+    they return the same rows on the sf0.01 corpus, probe-2 included."""
+    from downscaledclimatedata_spark.operators.similarity import (
+        _cascade_sql, ivf_assign_cascade)
+    from downscaledclimatedata_spark.sources.tables import load_table
+    emb = load_table(spark, SF_CORRECTNESS, "embeddings")
+    got = ivf_assign_cascade(emb, supers=(8, 4, 2), nprobe=nprobe)
+    if nprobe == 2:
+        got = got.withColumn("cid2", F.coalesce("cid2", F.lit(-1)))
+    want = duck.execute(_cascade_sql((8, 4, 2), probe2=nprobe == 2))
+    assert got.columns == [d[0] for d in want.description]
+    assert sorted(map(tuple, got.collect())) == sorted(want.fetchall())
 
 
 def test_scaled_codebook_two_level_shape(spark):
     """Below the growth threshold the two-level sizing returns the
-    static flat codebook with n_super == n_centroids (degenerate-exact,
+    static flat codebook with supers == (n_centroids,) (degenerate-exact,
     so the oracle-scale plan routes through flat ivf_assign); above it,
     k grows ∝ N^(2/3) (faster than the flat √N schedule — affordable
     because two-level assignment is N·√k) and n_super ≈ √k."""
@@ -357,22 +378,22 @@ def test_scaled_codebook_two_level_shape(spark):
         scaled_codebook, scaled_codebook_two_level)
     for n in (0, 1, KNN_CODEBOOK_BASE_N, 4 * KNN_CODEBOOK_BASE_N - 1):
         assert scaled_codebook_two_level(n) == \
-            (CENTROID_MOD, N_CENTROIDS, N_CENTROIDS)
+            (CENTROID_MOD, N_CENTROIDS, (N_CENTROIDS,), None)
     for n in (4 * KNN_CODEBOOK_BASE_N, 100 * KNN_CODEBOOK_BASE_N,
               10_000 * KNN_CODEBOOK_BASE_N):
-        mod, k, s = scaled_codebook_two_level(n)
+        mod, k, (s,), ev = scaled_codebook_two_level(n)
         _, k_flat = scaled_codebook(n)
         assert k >= k_flat, (k, k_flat)   # N^(2/3) >= sqrt(N) growth
-        assert s == max(1, math.isqrt(k))
+        assert s == max(1, math.isqrt(k)) and ev is None
         # candidate-id window stays inside the dense id range, so the
         # fixed-sample predicate always finds its k centroids
         assert mod * k <= n, (mod, k, n)
 
 
 def test_assigned_corpus_two_level_route_matches_flat_in_degenerate(spark):
-    """_assigned_corpus(n_super=k) and n_super=None must be the same
+    """_assigned_corpus(supers=(k,)) and supers=None must be the same
     relation (the oracle-scale guarantee), and an aggressive real
-    two-level route (n_super < k) still covers every nonzero vector
+    two-level route (supers < k) still covers every nonzero vector
     exactly once with valid centroid cells."""
     import random
     from downscaledclimatedata_spark.operators.similarity import (
@@ -385,47 +406,32 @@ def test_assigned_corpus_two_level_route_matches_flat_in_degenerate(spark):
                                       10, 8, None).collect()}
     degen = {r["vec_id"]: r["cid"]
              for r in _assigned_corpus(df, "vec_id", "embedding",
-                                       10, 8, 8).collect()}
+                                       10, 8, (8,)).collect()}
     assert degen == flat
-    routed = _assigned_corpus(df, "vec_id", "embedding", 10, 8, 2).collect()
+    routed = _assigned_corpus(df, "vec_id", "embedding", 10, 8,
+                              (2,)).collect()
     assert len(routed) == len(flat)  # every vector assigned exactly once
     cents = {i for i in range(120) if i % 10 == 0 and i < 80}
     assert {r["cid"] for r in routed} <= cents
 
 
-def test_two_level_agreement_gate(spark):
+@pytest.mark.parametrize("supers,floor", [((4,), 0.5), ((4, 2), 0.4)],
+                         ids=["two_level", "three_level"])
+def test_cascade_agreement_gate(spark, supers, floor):
     """Single-probe hierarchical routing must agree with flat assignment
-    on a majority of the sf0.01 corpus (measured 0.57 on landing)."""
+    on a majority of the sf0.01 corpus (two-level measured 0.57 on
+    landing; three-level has one more approximate hand-off, so a weaker
+    bound would hide a routing bug)."""
     from downscaledclimatedata_spark.operators.similarity import (
-        ivf_assign, ivf_assign_two_level)
+        ivf_assign, ivf_assign_cascade)
     from downscaledclimatedata_spark.sources.tables import load_table
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
+    emb = load_table(spark, SF_CORRECTNESS, "embeddings")
     flat = {r["vec_id"]: r["cid"] for r in ivf_assign(emb).collect()}
-    two = {r["vec_id"]: r["cid"] for r in ivf_assign_two_level(emb).collect()}
-    assert set(two) == set(flat)
-    agree = sum(1 for k in flat if two[k] == flat[k]) / len(flat)
-    assert agree >= 0.5, agree
-
-
-# --- ivf_assign_three_level ------------------------------------------------------
-
-def test_three_level_degenerates_to_flat_when_all_super(spark):
-    """With n_super2 == n_super == n_centroids both routing levels are
-    the full codebook, so three-level assignment must reproduce flat
-    assignment EXACTLY (the canon-scale guarantee)."""
-    import random
-    from downscaledclimatedata_spark.operators.similarity import (
-        ivf_assign, ivf_assign_three_level)
-    rnd = random.Random(11)
-    rows = [(i, [rnd.uniform(-1, 1) for _ in range(64)]) for i in range(80)]
-    df = _emb(spark, rows)
-    flat = {r["vec_id"]: r["cid"]
-            for r in ivf_assign(df, centroid_mod=10, n_centroids=8).collect()}
-    three = {r["vec_id"]: r["cid"]
-             for r in ivf_assign_three_level(
-                 df, centroid_mod=10, n_centroids=8, n_super=8,
-                 n_super2=8).collect()}
-    assert three == flat
+    routed = {r["vec_id"]: r["cid"]
+              for r in ivf_assign_cascade(emb, supers=supers).collect()}
+    assert set(routed) == set(flat)
+    agree = sum(1 for k in flat if routed[k] == flat[k]) / len(flat)
+    assert agree >= floor, agree
 
 
 def test_scaled_codebook_three_level_shape(spark):
@@ -436,25 +442,22 @@ def test_scaled_codebook_three_level_shape(spark):
     s1 ≈ k^(2/3), s2 ≈ k^(1/3), and spread_every ≈ N/k so the hash
     sample draws ~k centroids from ANY id layout."""
     from downscaledclimatedata_spark.operators.similarity import (
-        CENTROID_MOD, KNN_CODEBOOK_BASE_N, N_CENTROIDS,
-        scaled_codebook_three_level, scaled_codebook_two_level)
-    from downscaledclimatedata_spark.operators.similarity import (
-        KNN_THREE_LEVEL_MIN_N)
+        CENTROID_MOD, KNN_CODEBOOK_BASE_N, KNN_THREE_LEVEL_MIN_N,
+        N_CENTROIDS, scaled_codebook_three_level, scaled_codebook_two_level)
     for n in (0, 1, KNN_CODEBOOK_BASE_N, 4 * KNN_CODEBOOK_BASE_N - 1):
         assert scaled_codebook_three_level(n) == \
-            (CENTROID_MOD, N_CENTROIDS, N_CENTROIDS, N_CENTROIDS, None)
-    # tiered band (r12 measured crossover): two-level config — n_super2
-    # == n_super routes ivf_assign_two_level, spread_every None
+            (CENTROID_MOD, N_CENTROIDS, (N_CENTROIDS, N_CENTROIDS), None)
+    # tiered band (r12 measured crossover): two-level config — equal
+    # super counts route one super level, hash-spread sampling so the
+    # band survives striped/offset id layouts
     for n in (4 * KNN_CODEBOOK_BASE_N, KNN_THREE_LEVEL_MIN_N - 1):
-        mod, k, s1, s2, ev = scaled_codebook_three_level(n)
-        assert (mod, k, s1) == scaled_codebook_two_level(n)
-        # n_super2 == n_super routes two-level; hash-spread sampling so
-        # the band survives striped/offset id layouts
+        mod, k, (s1, s2), ev = scaled_codebook_three_level(n)
+        assert (mod, k, (s1,)) == scaled_codebook_two_level(n)[:3]
         assert s2 == s1 and ev == max(1, n // k)
     for n in (KNN_THREE_LEVEL_MIN_N, 100 * KNN_CODEBOOK_BASE_N,
               10_000 * KNN_CODEBOOK_BASE_N):
-        mod, k, s1, s2, ev = scaled_codebook_three_level(n)
-        _, k2, _ = scaled_codebook_two_level(n)
+        mod, k, (s1, s2), ev = scaled_codebook_three_level(n)
+        _, k2, _, _ = scaled_codebook_two_level(n)
         assert k >= k2, (k, k2)          # N^(3/4) >= N^(2/3) growth
         assert 1 <= s2 < s1 < k, (s2, s1, k)
         assert ev >= 1 and abs(n // ev - k) <= k, (n, ev, k)
@@ -469,14 +472,14 @@ def test_three_level_spread_sample_survives_strided_ids(spark):
     assign every vector."""
     import random
     from downscaledclimatedata_spark.operators.similarity import (
-        ivf_assign_three_level)
+        ivf_assign_cascade)
     rnd = random.Random(5)
     rows = [(copy * 1_000_000_000 + j,
              [rnd.uniform(-1, 1) for _ in range(64)])
             for copy in range(3) for j in range(120)]
     df = _emb(spark, rows)
-    out = ivf_assign_three_level(
-        df, n_centroids=24, n_super=8, n_super2=3,
+    out = ivf_assign_cascade(
+        df, n_centroids=24, supers=(8, 3),
         spread_every=len(rows) // 24).collect()
     assert len(out) == len(rows)  # every vector assigned exactly once
     stripes = {r["cid"] // 1_000_000_000 for r in out}
@@ -484,22 +487,6 @@ def test_three_level_spread_sample_survives_strided_ids(spark):
     # hierarchy is consistent: each cid routes under its own super cells
     for r in out:
         assert r["super2_cid"] is not None and r["super_cid"] is not None
-
-
-def test_three_level_agreement_gate(spark):
-    """Single-probe three-level routing must agree with flat assignment
-    on a majority of the sf0.01 corpus (one more approximate hand-off
-    than two-level, so a weaker bound would hide a routing bug)."""
-    from downscaledclimatedata_spark.operators.similarity import (
-        ivf_assign, ivf_assign_three_level)
-    from downscaledclimatedata_spark.sources.tables import load_table
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    flat = {r["vec_id"]: r["cid"] for r in ivf_assign(emb).collect()}
-    three = {r["vec_id"]: r["cid"]
-             for r in ivf_assign_three_level(emb).collect()}
-    assert set(three) == set(flat)
-    agree = sum(1 for k in flat if three[k] == flat[k]) / len(flat)
-    assert agree >= 0.4, agree
 
 
 @settings(max_examples=10, deadline=None,
