@@ -40,6 +40,63 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
 
 
+# --- the two codec harnesses ------------------------------------------------
+# Every uniform codec below is a stats function (bytes -> tuple or None) with
+# an output schema, or a payload formula (abs(doc_id) -> bytes). The Arrow
+# batch loop for each kind lives here once. The closures capture only what
+# they are handed (nested codec functions and plain data), so they pickle by
+# value like the codecs themselves.
+
+def _decode_stats(df: DataFrame, stats_fn, schema: T.StructType) -> DataFrame:
+    """REAL decode: binary payload -> one row of ``stats_fn`` values per
+    input row. ``schema`` field 0 is ``doc_id``; the others take the stats
+    tuple in order.
+
+    A NULL payload, or one ``stats_fn`` rejects (returns None), becomes an
+    all-NULL stats row rather than erroring the batch (row-level tolerance,
+    SURVEY §2 T7). Int and bigint columns go out as nullable pandas
+    Int32/Int64 so the NULLs survive the Arrow hand-back; other types
+    (TIFF's ``byte_order`` string) pass through as plain lists.
+    """
+    fields = schema.fields[1:]
+    names = [f.name for f in fields]
+    dtypes = [("Int32" if isinstance(f.dataType, T.IntegerType) else
+               "Int64" if isinstance(f.dataType, T.LongType) else None)
+              for f in fields]
+    nulls = (None,) * len(fields)
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+        for pdf in batches:
+            cols = {k: [] for k in names}
+            for payload in pdf["payload"]:
+                st = stats_fn(bytes(payload)) if payload is not None else None
+                for k, v in zip(names, nulls if st is None else st):
+                    cols[k].append(v)
+            out = {"doc_id": pdf["doc_id"]}
+            for k, dtype in zip(names, dtypes):
+                out[k] = pd.array(cols[k], dtype=dtype) if dtype else cols[k]
+            yield pd.DataFrame(out)
+
+    return df.select("doc_id", "payload").mapInPandas(_decode, schema)
+
+
+def _synthesize(df: DataFrame, blob_of) -> DataFrame:
+    """doc_id -> ``blob_of(abs(doc_id))`` as an opaque binary payload.
+
+    abs() keeps every formula identical cross-engine for any input ids;
+    the formula is the ONLY thing an oracle knows about the payload.
+    """
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import pandas as pd
+        for pdf in batches:
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"],
+                "payload": [blob_of(abs(int(d))) for d in pdf["doc_id"]]})
+
+    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+
+
 def decode_payloads(df: DataFrame) -> DataFrame:
     """Arrow-batched fake decode: binary -> (dims, format) metadata rows.
 
@@ -258,17 +315,11 @@ def synthesize_image_payloads(df: DataFrame) -> DataFrame:
     mk_png, mk_jpeg = make_png, make_jpeg
     w_mod, h_mod = DIM_W_MOD, DIM_H_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = 16 + d % w_mod, 16 + d % h_mod
-                payloads.append(mk_png(w, h) if d % 2 == 0 else mk_jpeg(w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = 16 + d % w_mod, 16 + d % h_mod
+        return mk_png(w, h) if d % 2 == 0 else mk_jpeg(w, h)
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_image_headers(df: DataFrame) -> DataFrame:
@@ -287,7 +338,8 @@ def decode_image_headers(df: DataFrame) -> DataFrame:
         for pdf in batches:
             fmts, ws, hs = [], [], []
             for payload in pdf["payload"]:
-                fmt, w, h = parse(bytes(payload))
+                fmt, w, h = (parse(bytes(payload)) if payload is not None
+                             else ("unknown", None, None))
                 fmts.append(fmt)
                 ws.append(w)
                 hs.append(h)
@@ -467,57 +519,25 @@ def synthesize_wav_payloads(df: DataFrame,
                           WAV_SAMPLE_MOD, WAV_SAMPLE_OFF)
     cmod = corrupt_mod
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                ch = 1 + d % 2
-                rate = rb + rs * (d % rm)
-                n = (fb + d % fm) * ch
-                samples = [((d * sa + i * sb) % smod) - soff
-                           for i in range(n)]
-                blob = mk(ch, rate, samples)
-                if cmod is not None and d % cmod == 0:
-                    blob = blob[:8]
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        ch = 1 + d % 2
+        rate = rb + rs * (d % rm)
+        n = (fb + d % fm) * ch
+        samples = [((d * sa + i * sb) % smod) - soff
+                   for i in range(n)]
+        blob = mk(ch, rate, samples)
+        if cmod is not None and d % cmod == 0:
+            blob = blob[:8]
+        return blob
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_wav_features(df: DataFrame) -> DataFrame:
     """REAL decode: RIFF chunk walk + PCM amplitude features read from
     the bytes themselves. Corrupt/non-WAV payloads come back as all-NULL
     feature rows rather than erroring the batch (T7)."""
-    parse = parse_wav_features
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            cols: dict[str, list] = {k: [] for k in
-                                     ("channels", "sample_rate", "bits",
-                                      "n_frames", "peak_amp", "energy",
-                                      "block_peak_sum")}
-            for payload in pdf["payload"]:
-                got = parse(bytes(payload)) if payload is not None else None
-                vals = got if got is not None else (None,) * 7
-                for k, v in zip(cols, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "channels": pd.array(cols["channels"], dtype="Int32"),
-                "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                "bits": pd.array(cols["bits"], dtype="Int32"),
-                "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                "peak_amp": pd.array(cols["peak_amp"], dtype="Int64"),
-                "energy": pd.array(cols["energy"], dtype="Int64"),
-                "block_peak_sum": pd.array(cols["block_peak_sum"],
-                                           dtype="Int64"),
-            })
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, AUDIO_DECODED_SCHEMA)
+    return _decode_stats(df, parse_wav_features, AUDIO_DECODED_SCHEMA)
 
 
 # --- oracle-checked query entries -------------------------------------------
@@ -927,19 +947,13 @@ def synthesize_png_pixel_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = PNG_PIX_W_BASE, PNG_PIX_W_MOD, PNG_PIX_H_BASE, PNG_PIX_H_MOD
     a, b, c = PNG_PIX_A, PNG_PIX_B, PNG_PIX_C
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                rows = [bytes((d * a + y * b + x * c) % 256 for x in range(w))
-                        for y in range(h)]
-                payloads.append(mk(rows, split_idat=(d % 3 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        rows = [bytes((d * a + y * b + x * c) % 256 for x in range(w))
+                for y in range(h)]
+        return mk(rows, split_idat=(d % 3 == 0))
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_png_pixels(df: DataFrame) -> DataFrame:
@@ -949,28 +963,7 @@ def decode_png_pixels(df: DataFrame) -> DataFrame:
     Corrupt payloads (bad CRC, truncation, wrong inflated size) yield a
     row of NULL stats rather than erroring the batch (SURVEY §2 T7).
     """
-    dec = decode_png_pixel_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "n_px", "pix_sum", "pix_min", "pix_max")}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(cols, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "pix_sum": pd.array(cols["pix_sum"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, PNG_PIXELS_SCHEMA)
+    return _decode_stats(df, decode_png_pixel_stats, PNG_PIXELS_SCHEMA)
 
 
 def multimodal_decode_png_pixels_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1052,74 +1045,44 @@ def synthesize_png_rgb_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = PNG_RGB_W_BASE, PNG_RGB_W_MOD, PNG_RGB_H_BASE, PNG_RGB_H_MOD
     a, b, c_, dd, cmod = PNG_RGB_A, PNG_RGB_B, PNG_RGB_C, PNG_RGB_D, PNG_RGB_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        rows = [bytes((d * a + y * b + x * c_ + ch * dd) % 256
+                      for x in range(w) for ch in range(3))
+                for y in range(h)]
+        blob = make_png_pixels(rows, color_type=2,
+                               split_idat=(d % 4 == 0))
+        if d % cmod == 0:
+            import struct
+            import zlib
 
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                rows = [bytes((d * a + y * b + x * c_ + ch * dd) % 256
-                              for x in range(w) for ch in range(3))
-                        for y in range(h)]
-                blob = make_png_pixels(rows, color_type=2,
-                                       split_idat=(d % 4 == 0))
-                if d % cmod == 0:
-                    # rebuild the IDAT from a raw stream missing the
-                    # last scanline: valid chunks/CRCs, wrong length
-                    full = bytearray()
-                    for row in rows:
-                        full.append(0)  # filter None keeps it simple
-                        full += row
-                    comp = zlib.compress(bytes(full[:-(3 * w + 1)]), 6)
-                    magic = blob[:8]
-                    ihdr = blob[8:8 + 25]
+            # rebuild the IDAT from a raw stream missing the
+            # last scanline: valid chunks/CRCs, wrong length
+            full = bytearray()
+            for row in rows:
+                full.append(0)  # filter None keeps it simple
+                full += row
+            comp = zlib.compress(bytes(full[:-(3 * w + 1)]), 6)
+            magic = blob[:8]
+            ihdr = blob[8:8 + 25]
 
-                    def _chunk(typ: bytes, data: bytes) -> bytes:
-                        return (struct.pack(">I", len(data)) + typ + data
-                                + struct.pack(
-                                    ">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
+            def _chunk(typ: bytes, data: bytes) -> bytes:
+                return (struct.pack(">I", len(data)) + typ + data
+                        + struct.pack(
+                            ">I", zlib.crc32(typ + data) & 0xFFFFFFFF))
 
-                    blob = (magic + ihdr + _chunk(b"IDAT", comp)
-                            + _chunk(b"IEND", b""))
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+            blob = (magic + ihdr + _chunk(b"IDAT", comp)
+                    + _chunk(b"IEND", b""))
+        return blob
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_png_rgb(df: DataFrame) -> DataFrame:
     """REAL RGB pixel decode: binary payload -> per-channel sums read
     from the reconstructed 3-byte-pixel scanlines (filters reverse
     per-byte at bpp=3). Corrupt payloads yield NULL rows (T7)."""
-    dec = decode_png_rgb_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("width", "height", "n_px", "sum_r", "sum_g", "sum_b",
-                    "pix_min", "pix_max")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 8
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, PNG_RGB_SCHEMA)
+    return _decode_stats(df, decode_png_rgb_stats, PNG_RGB_SCHEMA)
 
 
 def multimodal_decode_png_rgb_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1442,30 +1405,22 @@ def synthesize_gif_pixel_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = GIF_PIX_W_BASE, GIF_PIX_W_MOD, GIF_PIX_H_BASE, GIF_PIX_H_MOD
     a, b, c, cmod = GIF_PIX_A, GIF_PIX_B, GIF_PIX_C, GIF_PIX_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                if d % cmod == 0:
-                    # valid structure, garbage LZW: 20 bytes of 0xFF in
-                    # one sub-block
-                    payloads.append(
-                        b"GIF89a" + bytes([w & 0xFF, w >> 8, h & 0xFF, h >> 8])
-                        + b"\xf7\x00\x00"
-                        + bytes(v for i in range(256) for v in (i, i, i))
-                        + b"\x2c" + bytes([0, 0, 0, 0, w & 0xFF, w >> 8,
-                                           h & 0xFF, h >> 8, 0])
-                        + b"\x08\x14" + b"\xff" * 20 + b"\x00\x3b")
-                    continue
-                rows = [bytes((d * a + y * b + x * c) % 256 for x in range(w))
-                        for y in range(h)]
-                payloads.append(mk(rows, block_size=100 if d % 3 == 0 else 255))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        if d % cmod == 0:
+            # valid structure, garbage LZW: 20 bytes of 0xFF in
+            # one sub-block
+            return (b"GIF89a" + bytes([w & 0xFF, w >> 8, h & 0xFF, h >> 8])
+                    + b"\xf7\x00\x00"
+                    + bytes(v for i in range(256) for v in (i, i, i))
+                    + b"\x2c" + bytes([0, 0, 0, 0, w & 0xFF, w >> 8,
+                                       h & 0xFF, h >> 8, 0])
+                    + b"\x08\x14" + b"\xff" * 20 + b"\x00\x3b")
+        rows = [bytes((d * a + y * b + x * c) % 256 for x in range(w))
+                for y in range(h)]
+        return mk(rows, block_size=100 if d % 3 == 0 else 255)
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_gif_pixels(df: DataFrame) -> DataFrame:
@@ -1476,28 +1431,7 @@ def decode_gif_pixels(df: DataFrame) -> DataFrame:
     pixel count) yield a row of NULL stats rather than erroring the
     batch (SURVEY §2 T7).
     """
-    dec = decode_gif_pixel_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "n_px", "pix_sum", "pix_min", "pix_max")}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(cols, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "pix_sum": pd.array(cols["pix_sum"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, GIF_PIXELS_SCHEMA)
+    return _decode_stats(df, decode_gif_pixel_stats, GIF_PIXELS_SCHEMA)
 
 
 def multimodal_decode_gif_pixels_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1568,17 +1502,24 @@ MULAW_B = 48271
 MULAW_CORRUPT_MOD = 10
 
 
-def mulaw_decode_sample(b: int) -> int:
-    """One 8-bit mu-law byte -> linear 16-bit PCM (ITU-T G.711 decode
-    expansion): complement, split sign/exponent/mantissa, expand
-    ((8m + 132) << e) - 132. Pure integer formula — the SAME expression
-    the DuckDB oracle evaluates, so decoded PCM is oracle-checked."""
-    u = (~b) & 0xFF
-    sign = u & 0x80
-    e = (u >> 4) & 0x07
-    m = u & 0x0F
-    mag = ((8 * m + 132) << e) - 132
-    return -mag if sign else mag
+def _build_mulaw_sample():
+    def mulaw_decode_sample(b: int) -> int:
+        """One 8-bit mu-law byte -> linear 16-bit PCM (ITU-T G.711 decode
+        expansion): complement, split sign/exponent/mantissa, expand
+        ((8m + 132) << e) - 132. Pure integer formula — the SAME expression
+        the DuckDB oracle evaluates, so decoded PCM is oracle-checked."""
+        u = (~b) & 0xFF
+        sign = u & 0x80
+        e = (u >> 4) & 0x07
+        m = u & 0x0F
+        mag = ((8 * m + 132) << e) - 132
+        return -mag if sign else mag
+
+    return mulaw_decode_sample
+
+
+# nested so closures calling it pickle it by value (see make_png)
+mulaw_decode_sample = _build_mulaw_sample()
 
 
 def _build_mulaw_codecs():
@@ -1639,45 +1580,18 @@ def synthesize_mulaw_payloads(df: DataFrame) -> DataFrame:
     nb, nm, a, b, cmod = (MULAW_N_BASE, MULAW_N_MOD, MULAW_A, MULAW_B,
                           MULAW_CORRUPT_MOD)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                n = nb + d % nm
-                blob = mk(bytes((d * a + i * b) % 256 for i in range(n)))
-                if d % cmod == 0:
-                    blob = blob[:-(n // 2)]  # truncate inside data chunk
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        n = nb + d % nm
+        blob = mk(bytes((d * a + i * b) % 256 for i in range(n)))
+        if d % cmod == 0:
+            blob = blob[:-(n // 2)]  # truncate inside data chunk
+        return blob
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_mulaw(df: DataFrame) -> DataFrame:
-    dec = decode_mulaw_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("sample_rate", "n_samples", "peak_abs", "sum_pcm",
-                    "energy")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 5
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                "n_samples": pd.array(cols["n_samples"], dtype="Int32"),
-                "peak_abs": pd.array(cols["peak_abs"], dtype="Int32"),
-                "sum_pcm": pd.array(cols["sum_pcm"], dtype="Int64"),
-                "energy": pd.array(cols["energy"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, MULAW_SCHEMA)
+    return _decode_stats(df, decode_mulaw_stats, MULAW_SCHEMA)
 
 
 def multimodal_decode_mulaw_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1837,51 +1751,21 @@ def synthesize_bmp_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = BMP_W_BASE, BMP_W_MOD, BMP_H_BASE, BMP_H_MOD
     a, b, c_, dd, cmod = BMP_A, BMP_B, BMP_C, BMP_D, BMP_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                rows = [[tuple((d * a + y * b + x * c_ + ch * dd) % 256
-                               for ch in range(3)) for x in range(w)]
-                        for y in range(h)]
-                blob = mk(rows)
-                if d % cmod == 0:
-                    blob = blob[:-1]  # short pixel array
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        rows = [[tuple((d * a + y * b + x * c_ + ch * dd) % 256
+                       for ch in range(3)) for x in range(w)]
+                for y in range(h)]
+        blob = mk(rows)
+        if d % cmod == 0:
+            blob = blob[:-1]  # short pixel array
+        return blob
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_bmp(df: DataFrame) -> DataFrame:
-    dec = decode_bmp_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("width", "height", "n_px", "sum_r", "sum_g", "sum_b",
-                    "first_px_r", "last_px_b")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 8
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "first_px_r": pd.array(cols["first_px_r"], dtype="Int32"),
-                "last_px_b": pd.array(cols["last_px_b"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, BMP_SCHEMA)
+    return _decode_stats(df, decode_bmp_stats, BMP_SCHEMA)
 
 
 def multimodal_decode_bmp_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1952,20 +1836,12 @@ def synthesize_gif_payloads(df: DataFrame) -> DataFrame:
     mk = make_gif
     w_mod, h_mod, c_mod = DIM_W_MOD, DIM_H_MOD, GIF_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                if d % c_mod == 0:
-                    payloads.append(b"GIF89a\x10")  # truncated LSD
-                else:
-                    payloads.append(mk(16 + d % w_mod, 16 + d % h_mod))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        if d % c_mod == 0:
+            return b"GIF89a\x10"  # truncated LSD
+        return mk(16 + d % w_mod, 16 + d % h_mod)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def multimodal_decode_gif_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2025,29 +1901,15 @@ def thumbnail_png(df: DataFrame, side: int = THUMB) -> DataFrame:
     stub. Corrupt payloads -> NULL row (T7)."""
     s = side
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            ws, hs, thumbs = [], [], []
-            for payload in pdf["payload"]:
-                got = decode_png_gray_rows(bytes(payload))
-                if got is None:
-                    ws.append(None)
-                    hs.append(None)
-                    thumbs.append(None)
-                    continue
-                w, h, rows = got
-                thumbs.append([int(rows[(i * h) // s][(j * w) // s])
-                               for i in range(s) for j in range(s)])
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(ws, dtype="Int32"),
-                "height": pd.array(hs, dtype="Int32"),
-                "thumb": pd.Series(thumbs, dtype=object)})
+    def thumb_stats(blob: bytes):
+        got = decode_png_gray_rows(blob)
+        if got is None:
+            return None
+        w, h, rows = got
+        return w, h, [int(rows[(i * h) // s][(j * w) // s])
+                      for i in range(s) for j in range(s)]
 
-    return df.select("doc_id", "payload").mapInPandas(_resize, THUMB_SCHEMA)
+    return _decode_stats(df, thumb_stats, THUMB_SCHEMA)
 
 
 def multimodal_thumbnail_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2108,118 +1970,126 @@ ANIM_STRIDE = 2      # sample every 2nd frame
 ANIM_CORRUPT_MOD = 14
 
 
-def make_gif_animation(frames: list, block_size: int = 255) -> bytes:
-    """Multi-frame GIF89a: one logical screen + grayscale global color
-    table, then one image descriptor + REAL LZW stream PER FRAME, then
-    the trailer. (Real animated GIFs add graphic-control extensions for
-    timing; the frame-iteration structure — which is what a sampler
-    must walk — is exactly this.)"""
-    import struct
+def _build_gif_anim_codecs():
+    def make_gif_animation(frames: list, block_size: int = 255) -> bytes:
+        """Multi-frame GIF89a: one logical screen + grayscale global color
+        table, then one image descriptor + REAL LZW stream PER FRAME, then
+        the trailer. (Real animated GIFs add graphic-control extensions for
+        timing; the frame-iteration structure — which is what a sampler
+        must walk — is exactly this.)"""
+        import struct
 
-    h = len(frames[0])
-    w = len(frames[0][0]) if h else 0
-    lsd = struct.pack("<HH", w, h) + b"\xf7\x00\x00"
-    gct = bytes(v for i in range(256) for v in (i, i, i))
-    out = bytearray(b"GIF89a" + lsd + gct)
-    for rows in frames:
-        out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-        comp = gif_lzw_encode(b"".join(bytes(r) for r in rows), 8)
-        out.append(8)
-        for i in range(0, len(comp), block_size):
-            chunk = comp[i:i + block_size]
-            out.append(len(chunk))
-            out += chunk
-        out.append(0)
-    out += b"\x3b"
-    return bytes(out)
-
-
-def decode_gif_frames(blob: bytes):
-    """All frames of a (possibly multi-image) GIF: list of per-frame
-    (width, height, pix_sum, pix_min, pix_max), or None on any
-    structural defect. Walks every image block, skipping extensions —
-    the iteration a frame sampler drives. Stats derive from
-    :func:`decode_gif_frame_pixels`, the shared pixel-level walk."""
-    got = decode_gif_frame_pixels(blob)
-    if got is None:
-        return None
-    return [(iw, ih, sum(vals), min(vals), max(vals))
-            for (iw, ih, vals) in got]
+        h = len(frames[0])
+        w = len(frames[0][0]) if h else 0
+        lsd = struct.pack("<HH", w, h) + b"\xf7\x00\x00"
+        gct = bytes(v for i in range(256) for v in (i, i, i))
+        out = bytearray(b"GIF89a" + lsd + gct)
+        for rows in frames:
+            out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
+            comp = gif_lzw_encode(b"".join(bytes(r) for r in rows), 8)
+            out.append(8)
+            for i in range(0, len(comp), block_size):
+                chunk = comp[i:i + block_size]
+                out.append(len(chunk))
+                out += chunk
+            out.append(0)
+        out += b"\x3b"
+        return bytes(out)
 
 
-def decode_gif_frame_pixels(blob: bytes):
-    """Pixel-level multi-frame GIF decode: list of per-frame
-    (width, height, [gray values]) or None on any structural defect."""
-    import struct
-
-    try:
-        blob = bytes(blob)
-        if blob[:6] not in (b"GIF87a", b"GIF89a") or len(blob) < 13:
+    def decode_gif_frames(blob: bytes):
+        """All frames of a (possibly multi-image) GIF: list of per-frame
+        (width, height, pix_sum, pix_min, pix_max), or None on any
+        structural defect. Walks every image block, skipping extensions —
+        the iteration a frame sampler drives. Stats derive from
+        :func:`decode_gif_frame_pixels`, the shared pixel-level walk."""
+        got = decode_gif_frame_pixels(blob)
+        if got is None:
             return None
-        packed = blob[10]
-        i = 13
-        palette = None
-        if packed & 0x80:
-            n_gct = 2 << (packed & 0x07)
-            palette = blob[i:i + 3 * n_gct]
-            if len(palette) != 3 * n_gct:
+        return [(iw, ih, sum(vals), min(vals), max(vals))
+                for (iw, ih, vals) in got]
+
+
+    def decode_gif_frame_pixels(blob: bytes):
+        """Pixel-level multi-frame GIF decode: list of per-frame
+        (width, height, [gray values]) or None on any structural defect."""
+        import struct
+
+        try:
+            blob = bytes(blob)
+            if blob[:6] not in (b"GIF87a", b"GIF89a") or len(blob) < 13:
                 return None
-            i += 3 * n_gct
-        frames = []
-        while i < len(blob):
-            b0 = blob[i]
-            if b0 == 0x3B:
-                return frames if frames else None
-            if b0 == 0x21:
-                i += 2
+            packed = blob[10]
+            i = 13
+            palette = None
+            if packed & 0x80:
+                n_gct = 2 << (packed & 0x07)
+                palette = blob[i:i + 3 * n_gct]
+                if len(palette) != 3 * n_gct:
+                    return None
+                i += 3 * n_gct
+            frames = []
+            while i < len(blob):
+                b0 = blob[i]
+                if b0 == 0x3B:
+                    return frames if frames else None
+                if b0 == 0x21:
+                    i += 2
+                    while i < len(blob) and blob[i] != 0:
+                        i += 1 + blob[i]
+                    if i >= len(blob):
+                        return None
+                    i += 1
+                    continue
+                if b0 != 0x2C:
+                    return None
+                _, _, iw, ih = struct.unpack("<HHHH", blob[i + 1:i + 9])
+                ipacked = blob[i + 9]
+                i += 10
+                pal = palette
+                if ipacked & 0x80:
+                    n_lct = 2 << (ipacked & 0x07)
+                    pal = blob[i:i + 3 * n_lct]
+                    if len(pal) != 3 * n_lct:
+                        return None
+                    i += 3 * n_lct
+                if pal is None or i >= len(blob):
+                    return None
+                mcs = blob[i]
+                i += 1
+                if not 2 <= mcs <= 8:
+                    return None
+                comp = bytearray()
                 while i < len(blob) and blob[i] != 0:
-                    i += 1 + blob[i]
+                    ln = blob[i]
+                    chunk = blob[i + 1:i + 1 + ln]
+                    if len(chunk) != ln:
+                        return None
+                    comp += chunk
+                    i += 1 + ln
                 if i >= len(blob):
                     return None
-                i += 1
-                continue
-            if b0 != 0x2C:
-                return None
-            _, _, iw, ih = struct.unpack("<HHHH", blob[i + 1:i + 9])
-            ipacked = blob[i + 9]
-            i += 10
-            pal = palette
-            if ipacked & 0x80:
-                n_lct = 2 << (ipacked & 0x07)
-                pal = blob[i:i + 3 * n_lct]
-                if len(pal) != 3 * n_lct:
+                i += 1  # image-data terminator
+                idx = gif_lzw_decode(bytes(comp), mcs)
+                if len(idx) != iw * ih:
                     return None
-                i += 3 * n_lct
-            if pal is None or i >= len(blob):
-                return None
-            mcs = blob[i]
-            i += 1
-            if not 2 <= mcs <= 8:
-                return None
-            comp = bytearray()
-            while i < len(blob) and blob[i] != 0:
-                ln = blob[i]
-                chunk = blob[i + 1:i + 1 + ln]
-                if len(chunk) != ln:
+                n_colors = len(pal) // 3
+                if idx and max(idx) >= n_colors:
                     return None
-                comp += chunk
-                i += 1 + ln
-            if i >= len(blob):
-                return None
-            i += 1  # image-data terminator
-            idx = gif_lzw_decode(bytes(comp), mcs)
-            if len(idx) != iw * ih:
-                return None
-            n_colors = len(pal) // 3
-            if idx and max(idx) >= n_colors:
-                return None
-            vals = [pal[3 * j] for j in idx]
-            if not vals:
-                return None
-            frames.append((iw, ih, vals))
-        return None  # ran out of bytes before the trailer
-    except (ValueError, IndexError, struct.error):
-        return None
+                vals = [pal[3 * j] for j in idx]
+                if not vals:
+                    return None
+                frames.append((iw, ih, vals))
+            return None  # ran out of bytes before the trailer
+        except (ValueError, IndexError, struct.error):
+            return None
+
+    return make_gif_animation, decode_gif_frames, decode_gif_frame_pixels
+
+
+# nested so closures calling them pickle them by value (see make_png)
+(make_gif_animation, decode_gif_frames,
+ decode_gif_frame_pixels) = _build_gif_anim_codecs()
 
 
 def synthesize_gif_animations(df: DataFrame) -> DataFrame:
@@ -2232,42 +2102,34 @@ def synthesize_gif_animations(df: DataFrame) -> DataFrame:
     fb, fm = ANIM_FRAMES_BASE, ANIM_FRAMES_MOD
     a, b, c, e, cmod = ANIM_A, ANIM_B, ANIM_C, ANIM_E, ANIM_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                nf = fb + d % fm
-                frames = [
-                    [bytes((d * a + z * e + y * b + x * c) % 256
-                           for x in range(w)) for y in range(h)]
-                    for z in range(nf)]
-                if d % cmod == 0:
-                    # Replace the final frame with a structurally-valid
-                    # image block whose one-sub-block LZW stream is
-                    # garbage (first 9-bit code = 511, out of table
-                    # range), same device as the single-image synth.
-                    # Built from block structure, not byte offsets, so
-                    # it stays valid for any encoder sub-block layout.
-                    import struct as _st
-                    blob = (make_gif_animation(frames[:-1])[:-1]  # drop 0x3B
-                            + b"\x2c" + _st.pack("<HHHH", 0, 0, w, h)
-                            + b"\x00\x08\x14" + b"\xff" * 20 + b"\x00\x3b")
-                else:
-                    blob = make_gif_animation(frames)
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        nf = fb + d % fm
+        frames = [
+            [bytes((d * a + z * e + y * b + x * c) % 256
+                   for x in range(w)) for y in range(h)]
+            for z in range(nf)]
+        if d % cmod == 0:
+            # Replace the final frame with a structurally-valid
+            # image block whose one-sub-block LZW stream is
+            # garbage (first 9-bit code = 511, out of table
+            # range), same device as the single-image synth.
+            # Built from block structure, not byte offsets, so
+            # it stays valid for any encoder sub-block layout.
+            import struct as _st
+            return (make_gif_animation(frames[:-1])[:-1]  # drop 0x3B
+                    + b"\x2c" + _st.pack("<HHHH", 0, 0, w, h)
+                    + b"\x00\x08\x14" + b"\xff" * 20 + b"\x00\x3b")
+        return make_gif_animation(frames)
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def sample_gif_frames(df: DataFrame, stride: int = ANIM_STRIDE) -> DataFrame:
     """REAL video-style frame sampling: decode the multi-frame payload,
     keep every ``stride``-th frame, one output row per kept frame with
-    stats computed from the genuinely decoded pixels. Corrupt payloads
-    produce a single all-NULL row (frame_idx NULL), so tolerance is
+    stats computed from the genuinely decoded pixels. Corrupt and NULL
+    payloads produce a single all-NULL row (frame_idx NULL), so tolerance is
     visible in-band."""
     s = stride
 
@@ -2278,7 +2140,8 @@ def sample_gif_frames(df: DataFrame, stride: int = ANIM_STRIDE) -> DataFrame:
             cols = {k: [] for k in
                     ("width", "height", "pix_sum", "pix_min", "pix_max")}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = decode_gif_frames(bytes(payload))
+                frames = (decode_gif_frames(bytes(payload))
+                          if payload is not None else None)
                 if frames is None:
                     ids.append(doc_id)
                     fidx.append(None)
@@ -2375,35 +2238,21 @@ def histogram_features(df: DataFrame, bins: int = HIST_BINS) -> DataFrame:
     fake (no torch in the container). Corrupt payloads -> NULL row."""
     b = bins
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            n_px, hists, means = [], [], []
-            for payload in pdf["payload"]:
-                got = decode_png_gray_rows(bytes(payload))
-                if got is None:
-                    n_px.append(None)
-                    hists.append(None)
-                    means.append(None)
-                    continue
-                w, h, rows = got
-                counts = [0] * b
-                total = 0
-                for r in rows:
-                    for v in r:
-                        counts[(v * b) // 256] += 1
-                        total += v
-                n = w * h
-                n_px.append(n)
-                hists.append(counts)
-                means.append((total * 100) // n if n else None)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_px": pd.array(n_px, dtype="Int32"),
-                "hist": pd.Series(hists, dtype=object),
-                "mean_cents": pd.array(means, dtype="Int64")})
+    def hist_stats(blob: bytes):
+        got = decode_png_gray_rows(blob)
+        if got is None:
+            return None
+        w, h, rows = got
+        counts = [0] * b
+        total = 0
+        for r in rows:
+            for v in r:
+                counts[(v * b) // 256] += 1
+                total += v
+        n = w * h
+        return n, counts, ((total * 100) // n if n else None)
 
-    return df.select("doc_id", "payload").mapInPandas(_feat, HIST_SCHEMA)
+    return _decode_stats(df, hist_stats, HIST_SCHEMA)
 
 
 def multimodal_feature_histogram_query(spark: SparkSession,
@@ -2996,11 +2845,18 @@ def _build_jpeg_codecs():
  make_jpeg_420, decode_jpeg_420_stats) = _build_jpeg_codecs()
 
 
-def jpeg_dc_value(d: int, by: int, bx: int) -> int:
-    """The synthesized quantized DC of block (by, bx) — the ONLY thing
-    the oracle knows about a payload's content."""
-    return (d * JPEG_DC_A + by * JPEG_DC_B + bx * JPEG_DC_C) \
-        % JPEG_DC_MOD - 64
+def _build_jpeg_dc_value():
+    def jpeg_dc_value(d: int, by: int, bx: int) -> int:
+        """The synthesized quantized DC of block (by, bx) — the ONLY thing
+        the oracle knows about a payload's content."""
+        return (d * JPEG_DC_A + by * JPEG_DC_B + bx * JPEG_DC_C) \
+            % JPEG_DC_MOD - 64
+
+    return jpeg_dc_value
+
+
+# nested so closures calling it pickle it by value (see make_png)
+jpeg_dc_value = _build_jpeg_dc_value()
 
 
 def synthesize_jpeg_payloads(df: DataFrame) -> DataFrame:
@@ -3013,50 +2869,21 @@ def synthesize_jpeg_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = JPEG_W_BASE, JPEG_W_MOD, JPEG_H_BASE, JPEG_H_MOD
     cmod = JPEG_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                nbx, nby = -(-w // 8), -(-h // 8)
-                grid = [dcv(d, by, bx)
-                        for by in range(nby) for bx in range(nbx)]
-                payloads.append(mk(grid, w, h, corrupt=(d % cmod == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        nbx, nby = -(-w // 8), -(-h // 8)
+        grid = [dcv(d, by, bx)
+                for by in range(nby) for bx in range(nbx)]
+        return mk(grid, w, h, corrupt=(d % cmod == 0))
 
-    return df.select("doc_id").mapInPandas(_synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_jpeg_pixels(df: DataFrame) -> DataFrame:
     """REAL pixel decode: binary payload -> per-image stats from the
     Huffman-decoded, dequantized, IDCT-reconstructed pixels. Corrupt
     payloads yield a row of NULL stats (SURVEY §2 T7)."""
-    dec = decode_jpeg_pixel_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "n_px", "pix_sum", "pix_min",
-                     "pix_max")}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(cols, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "pix_sum": pd.array(cols["pix_sum"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(
-        _decode, PNG_PIXELS_SCHEMA)
+    return _decode_stats(df, decode_jpeg_pixel_stats, PNG_PIXELS_SCHEMA)
 
 
 def multimodal_decode_jpeg_pixels_query(spark: SparkSession,
@@ -3116,27 +2943,18 @@ def synthesize_jpeg_color_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = JPEG_W_BASE, JPEG_W_MOD, JPEG_H_BASE, JPEG_H_MOD
     cbs, crs, cmod = JPEG_CB_SEED, JPEG_CR_SEED, JPEG_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                mw, mh = -(-w // 16), -(-h // 16)
-                yg = [dcv(d, by, bx)
-                      for by in range(mh * 2) for bx in range(mw * 2)]
-                cbg = [dcv(d + cbs, my, mx)
-                       for my in range(mh) for mx in range(mw)]
-                crg = [dcv(d + crs, my, mx)
-                       for my in range(mh) for mx in range(mw)]
-                payloads.append(mk(yg, cbg, crg, w, h,
-                                   corrupt=(d % cmod == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        mw, mh = -(-w // 16), -(-h // 16)
+        yg = [dcv(d, by, bx)
+              for by in range(mh * 2) for bx in range(mw * 2)]
+        cbg = [dcv(d + cbs, my, mx)
+               for my in range(mh) for mx in range(mw)]
+        crg = [dcv(d + crs, my, mx)
+               for my in range(mh) for mx in range(mw)]
+        return mk(yg, cbg, crg, w, h, corrupt=(d % cmod == 0))
 
-    return df.select("doc_id").mapInPandas(_synth,
-                                           "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_jpeg_color(df: DataFrame) -> DataFrame:
@@ -3144,32 +2962,7 @@ def decode_jpeg_color(df: DataFrame) -> DataFrame:
     per-component dequant + IDCT, nearest chroma upsample, fixed-point
     integer YCbCr->RGB; per-image channel stats. Corrupt payloads
     yield a NULL-stats row (SURVEY §2 T7)."""
-    dec = decode_jpeg_420_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            cols = {k: [] for k in
-                    ("width", "height", "n_px", "sum_r", "sum_g",
-                     "sum_b", "pix_min", "pix_max")}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 8
-                for k, v in zip(cols, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(
-        _decode, PNG_RGB_SCHEMA)
+    return _decode_stats(df, decode_jpeg_420_stats, PNG_RGB_SCHEMA)
 
 
 def multimodal_decode_jpeg_color_query(spark: SparkSession,
@@ -3254,19 +3047,26 @@ ALAW_B = 69621
 ALAW_CORRUPT_MOD = 14
 
 
-def alaw_decode_sample(b: int) -> int:
-    """One 8-bit A-law byte -> linear 16-bit PCM (ITU-T G.711 A-law
-    expansion): XOR 0x55 toggle, split sign/segment/mantissa, expand —
-    segment 0 is the linear tail (16m + 8), higher segments shift the
-    chord (16m + 264) << (seg - 1). The SIGN BIT SET means POSITIVE in
-    A-law (opposite of mu-law). Pure integer formula — the SAME
-    expression the DuckDB oracle evaluates, so decoded PCM is
-    oracle-checked."""
-    u = b ^ 0x55
-    m = u & 0x0F
-    seg = (u >> 4) & 0x07
-    mag = (16 * m + 8) if seg == 0 else ((16 * m + 264) << (seg - 1))
-    return mag if (u & 0x80) else -mag
+def _build_alaw_sample():
+    def alaw_decode_sample(b: int) -> int:
+        """One 8-bit A-law byte -> linear 16-bit PCM (ITU-T G.711 A-law
+        expansion): XOR 0x55 toggle, split sign/segment/mantissa, expand —
+        segment 0 is the linear tail (16m + 8), higher segments shift the
+        chord (16m + 264) << (seg - 1). The SIGN BIT SET means POSITIVE in
+        A-law (opposite of mu-law). Pure integer formula — the SAME
+        expression the DuckDB oracle evaluates, so decoded PCM is
+        oracle-checked."""
+        u = b ^ 0x55
+        m = u & 0x0F
+        seg = (u >> 4) & 0x07
+        mag = (16 * m + 8) if seg == 0 else ((16 * m + 264) << (seg - 1))
+        return mag if (u & 0x80) else -mag
+
+    return alaw_decode_sample
+
+
+# nested so closures calling it pickle it by value (see make_png)
+alaw_decode_sample = _build_alaw_sample()
 
 
 def _build_alaw_codecs():
@@ -3331,45 +3131,16 @@ def synthesize_alaw_payloads(df: DataFrame) -> DataFrame:
     nb, nm, a, b, cmod = (ALAW_N_BASE, ALAW_N_MOD, ALAW_A, ALAW_B,
                           ALAW_CORRUPT_MOD)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                n = nb + d % nm
-                raw = bytes((d * a + i * b) % 256 for i in range(n))
-                payloads.append(mk(raw, fmt_tag=1 if d % cmod == 0 else 6))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        n = nb + d % nm
+        raw = bytes((d * a + i * b) % 256 for i in range(n))
+        return mk(raw, fmt_tag=1 if d % cmod == 0 else 6)
 
-    return df.select("doc_id").mapInPandas(_synth,
-                                           "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_alaw(df: DataFrame) -> DataFrame:
-    dec = decode_alaw_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("sample_rate", "n_samples", "peak_abs", "sum_pcm",
-                    "energy")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 5
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                "n_samples": pd.array(cols["n_samples"], dtype="Int32"),
-                "peak_abs": pd.array(cols["peak_abs"], dtype="Int32"),
-                "sum_pcm": pd.array(cols["sum_pcm"], dtype="Int64"),
-                "energy": pd.array(cols["energy"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, MULAW_SCHEMA)
+    return _decode_stats(df, decode_alaw_stats, MULAW_SCHEMA)
 
 
 def multimodal_decode_alaw_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3605,53 +3376,20 @@ def synthesize_png_palette_payloads(df: DataFrame) -> DataFrame:
     p1, p2, p3 = PNG_PAL_P1, PNG_PAL_P2, PNG_PAL_P3
     cmod = PNG_PAL_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                rows = [bytes((d * a + y * b + x * c_) % 256
-                              for x in range(w)) for y in range(h)]
-                pal = ([] if d % cmod == 0 else
-                       [tuple((d * p1 + j * p2 + ch * p3) % 256
-                              for ch in range(3)) for j in range(256)])
-                payloads.append(mk(rows, pal, split_idat=(d % 5 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        rows = [bytes((d * a + y * b + x * c_) % 256
+                      for x in range(w)) for y in range(h)]
+        pal = ([] if d % cmod == 0 else
+               [tuple((d * p1 + j * p2 + ch * p3) % 256
+                      for ch in range(3)) for j in range(256)])
+        return mk(rows, pal, split_idat=(d % 5 == 0))
 
-    return df.select("doc_id").mapInPandas(_synth,
-                                           "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_png_palette(df: DataFrame) -> DataFrame:
-    dec = decode_png_palette_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("width", "height", "n_px", "sum_r", "sum_g", "sum_b",
-                    "pix_min", "pix_max")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 8
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode,
-                                                      PNG_RGB_SCHEMA)
+    return _decode_stats(df, decode_png_palette_stats, PNG_RGB_SCHEMA)
 
 
 def multimodal_decode_png_palette_query(spark: SparkSession,
@@ -3726,14 +3464,21 @@ QOI_C = 77        # channel multiplier
 QOI_CORRUPT_MOD = 15
 
 
-def qoi_pixel(d: int, y: int, x: int, ch: int) -> int:
-    """Closed-form synthetic pixel shared with the SQL oracle: constant
-    within 4-pixel spans (exercises QOI_OP_RUN), +1 steps on even rows
-    (QOI_OP_DIFF) and +3 steps on odd rows (QOI_OP_LUMA), row jumps
-    via the large B (QOI_OP_RGB), and mod-256 wraparound revisits old
-    values (QOI_OP_INDEX)."""
-    return (d * QOI_A + y * QOI_B + ch * QOI_C
-            + (x // 4) * (1 + (y % 2) * 2)) % 256
+def _build_qoi_pixel():
+    def qoi_pixel(d: int, y: int, x: int, ch: int) -> int:
+        """Closed-form synthetic pixel shared with the SQL oracle: constant
+        within 4-pixel spans (exercises QOI_OP_RUN), +1 steps on even rows
+        (QOI_OP_DIFF) and +3 steps on odd rows (QOI_OP_LUMA), row jumps
+        via the large B (QOI_OP_RGB), and mod-256 wraparound revisits old
+        values (QOI_OP_INDEX)."""
+        return (d * QOI_A + y * QOI_B + ch * QOI_C
+                + (x // 4) * (1 + (y % 2) * 2)) % 256
+
+    return qoi_pixel
+
+
+# nested so closures calling it pickle it by value (see make_png)
+qoi_pixel = _build_qoi_pixel()
 
 
 def _build_qoi_codecs():
@@ -3882,53 +3627,20 @@ def synthesize_qoi_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm, cmod = (QOI_W_BASE, QOI_W_MOD, QOI_H_BASE, QOI_H_MOD,
                             QOI_CORRUPT_MOD)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                rows = [[(qp(d, y, x, 0), qp(d, y, x, 1), qp(d, y, x, 2))
-                         for x in range(w)] for y in range(h)]
-                blob = mk(rows)
-                if d % cmod == 0:
-                    blob = blob[:-11]  # cut end marker + final chunk bytes
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        rows = [[(qp(d, y, x, 0), qp(d, y, x, 1), qp(d, y, x, 2))
+                 for x in range(w)] for y in range(h)]
+        blob = mk(rows)
+        if d % cmod == 0:
+            blob = blob[:-11]  # cut end marker + final chunk bytes
+        return blob
 
-    return df.select("doc_id").mapInPandas(_synth,
-                                           "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_qoi(df: DataFrame) -> DataFrame:
-    dec = decode_qoi_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("width", "height", "n_px", "sum_r", "sum_g", "sum_b",
-                    "pix_min", "pix_max")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 8
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode,
-                                                      PNG_RGB_SCHEMA)
+    return _decode_stats(df, decode_qoi_stats, PNG_RGB_SCHEMA)
 
 
 def multimodal_decode_qoi_query(spark: SparkSession,
@@ -4008,23 +3720,30 @@ ADPCM_B = 48271
 ADPCM_CORRUPT_MOD = 10
 
 
-def adpcm_decode_nibble(pred: int, idx: int, nib: int) -> tuple[int, int]:
-    """One IMA ADPCM 4-bit code -> (new predictor, new step index): the
-    shift-add diff expansion (no multiplies — the 1983 Intel/DVI
-    hardware path), clamped to int16 / the 89-entry step table. The
-    EXACT expression the DuckDB oracle's recursive CTE evaluates."""
-    st = ADPCM_STEP_TABLE[idx]
-    diff = (st >> 3)
-    if nib & 1:
-        diff += st >> 2
-    if nib & 2:
-        diff += st >> 1
-    if nib & 4:
-        diff += st
-    pred = pred - diff if nib & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    idx = max(0, min(88, idx + ADPCM_INDEX_TABLE[nib]))
-    return pred, idx
+def _build_adpcm_nibble():
+    def adpcm_decode_nibble(pred: int, idx: int, nib: int) -> tuple[int, int]:
+        """One IMA ADPCM 4-bit code -> (new predictor, new step index): the
+        shift-add diff expansion (no multiplies — the 1983 Intel/DVI
+        hardware path), clamped to int16 / the 89-entry step table. The
+        EXACT expression the DuckDB oracle's recursive CTE evaluates."""
+        st = ADPCM_STEP_TABLE[idx]
+        diff = (st >> 3)
+        if nib & 1:
+            diff += st >> 2
+        if nib & 2:
+            diff += st >> 1
+        if nib & 4:
+            diff += st
+        pred = pred - diff if nib & 8 else pred + diff
+        pred = max(-32768, min(32767, pred))
+        idx = max(0, min(88, idx + ADPCM_INDEX_TABLE[nib]))
+        return pred, idx
+
+    return adpcm_decode_nibble
+
+
+# nested so closures calling it pickle it by value (see make_png)
+adpcm_decode_nibble = _build_adpcm_nibble()
 
 
 def _build_adpcm_codecs():
@@ -4105,48 +3824,19 @@ def synthesize_adpcm_payloads(df: DataFrame) -> DataFrame:
     nb, nm, a, b, cmod = (ADPCM_N_BYTES_BASE, ADPCM_N_BYTES_MOD,
                           ADPCM_A, ADPCM_B, ADPCM_CORRUPT_MOD)
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                n = nb + d % nm
-                blob = mk(bytes((d * a + j * b) % 256 for j in range(n)),
-                          ((d * 7) % 1024) - 512, d % 89)
-                if d % cmod == 0:
-                    blob = blob[:-(n // 2 + 1)]
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        n = nb + d % nm
+        blob = mk(bytes((d * a + j * b) % 256 for j in range(n)),
+                  ((d * 7) % 1024) - 512, d % 89)
+        if d % cmod == 0:
+            blob = blob[:-(n // 2 + 1)]
+        return blob
 
-    return df.select("doc_id").mapInPandas(_synth,
-                                           "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_adpcm(df: DataFrame) -> DataFrame:
-    dec = decode_adpcm_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            keys = ("sample_rate", "n_samples", "peak_abs", "sum_pcm",
-                    "energy")
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 5
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "sample_rate": pd.array(cols["sample_rate"], dtype="Int32"),
-                "n_samples": pd.array(cols["n_samples"], dtype="Int32"),
-                "peak_abs": pd.array(cols["peak_abs"], dtype="Int32"),
-                "sum_pcm": pd.array(cols["sum_pcm"], dtype="Int64"),
-                "energy": pd.array(cols["energy"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, MULAW_SCHEMA)
+    return _decode_stats(df, decode_adpcm_stats, MULAW_SCHEMA)
 
 
 def multimodal_decode_adpcm_query(spark: SparkSession,
@@ -4377,56 +4067,23 @@ def synthesize_tga_payloads(df: DataFrame) -> DataFrame:
     a, b, c_, dd = TGA_A, TGA_B, TGA_C, TGA_D
     rmod, cmod = TGA_RUN_MOD, TGA_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                rows = [[tuple((d * a + y * b
-                                + (x // (1 + y % rmod)) * c_
-                                + ch * dd) % 256
-                               for ch in range(3)) for x in range(w)]
-                        for y in range(h)]
-                blob = mk(rows)
-                if d % cmod == 0:
-                    blob = blob[:-2]  # stream underrun
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        rows = [[tuple((d * a + y * b
+                        + (x // (1 + y % rmod)) * c_
+                        + ch * dd) % 256
+                       for ch in range(3)) for x in range(w)]
+                for y in range(h)]
+        blob = mk(rows)
+        if d % cmod == 0:
+            blob = blob[:-2]  # stream underrun
+        return blob
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_tga(df: DataFrame) -> DataFrame:
-    dec = decode_tga_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_px", "n_packets", "sum_r", "sum_g",
-                "sum_b", "first_px_r", "last_px_b")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 9
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "n_packets": pd.array(cols["n_packets"], dtype="Int64"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "first_px_r": pd.array(cols["first_px_r"], dtype="Int32"),
-                "last_px_b": pd.array(cols["last_px_b"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, TGA_SCHEMA)
+    return _decode_stats(df, decode_tga_stats, TGA_SCHEMA)
 
 
 def multimodal_decode_tga_query(spark: SparkSession,
@@ -4524,27 +4181,7 @@ ZCR_SCHEMA = T.StructType([
 
 
 def decode_wav_zcr(df: DataFrame) -> DataFrame:
-    parse = parse_wav_zcr
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("channels", "n_frames", "zcr", "peak0", "sum0")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = parse(bytes(payload))
-                vals = st if st is not None else (None,) * 5
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "channels": pd.array(cols["channels"], dtype="Int32"),
-                "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                "zcr": pd.array(cols["zcr"], dtype="Int64"),
-                "peak0": pd.array(cols["peak0"], dtype="Int32"),
-                "sum0": pd.array(cols["sum0"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, ZCR_SCHEMA)
+    return _decode_stats(df, parse_wav_zcr, ZCR_SCHEMA)
 
 
 def multimodal_audio_zcr_query(spark: SparkSession,
@@ -4636,26 +4273,18 @@ def synthesize_scene_png_payloads(df: DataFrame) -> DataFrame:
     a, b, c = PHASH_A, PHASH_B, PHASH_C
     cmod = PHASH_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                s = d % smod
-                kw, kh = 1 + d % 3, 1 + d % 2
-                w, h = g * kw, g * kh
-                rows = [bytes((s * a + (y // kh) * b + (x // kw) * c) % 256
-                              for x in range(w)) for y in range(h)]
-                blob = mk(rows)
-                if d % cmod == 0:
-                    blob = blob[:20]
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        s = d % smod
+        kw, kh = 1 + d % 3, 1 + d % 2
+        w, h = g * kw, g * kh
+        rows = [bytes((s * a + (y // kh) * b + (x // kw) * c) % 256
+                      for x in range(w)) for y in range(h)]
+        blob = mk(rows)
+        if d % cmod == 0:
+            blob = blob[:20]
+        return blob
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def dhash_images(df: DataFrame, grid: int = PHASH_GRID) -> DataFrame:
@@ -4668,31 +4297,21 @@ def dhash_images(df: DataFrame, grid: int = PHASH_GRID) -> DataFrame:
     recovers the scene grid exactly."""
     g = grid
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            ws, hs, hh = [], [], []
-            for payload in pdf["payload"]:
-                got = decode_png_gray_rows(bytes(payload))
-                if got is None:
-                    ws.append(None); hs.append(None); hh.append(None)
-                    continue
-                w, h, rows = got
-                px = [[rows[(i * h) // g][(j * w) // g] for j in range(g)]
-                      for i in range(g)]
-                val = 0
-                for i in range(g):
-                    for j in range(g - 1):
-                        if px[i][j] > px[i][j + 1]:
-                            val |= 1 << (i * (g - 1) + j)
-                ws.append(w); hs.append(h); hh.append(val)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(ws, dtype="Int32"),
-                "height": pd.array(hs, dtype="Int32"),
-                "dhash": pd.array(hh, dtype="Int64")})
+    def dhash_stats(blob: bytes):
+        got = decode_png_gray_rows(blob)
+        if got is None:
+            return None
+        w, h, rows = got
+        px = [[rows[(i * h) // g][(j * w) // g] for j in range(g)]
+              for i in range(g)]
+        val = 0
+        for i in range(g):
+            for j in range(g - 1):
+                if px[i][j] > px[i][j + 1]:
+                    val |= 1 << (i * (g - 1) + j)
+        return w, h, val
 
-    return df.select("doc_id", "payload").mapInPandas(_hash, PHASH_SCHEMA)
+    return _decode_stats(df, dhash_stats, PHASH_SCHEMA)
 
 
 def multimodal_phash_dedup_query(spark: SparkSession,
@@ -4791,32 +4410,22 @@ def synthesize_shot_gifs(df: DataFrame) -> DataFrame:
     sl, sj, sd = SHOT_LEN, SHOT_JUMP, SHOT_DRIFT
     cmod = SHOT_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                nf = fb + d % fm
-                frames = [
-                    [bytes((d * a + (z // sl) * sj + z * sd
-                            + y * b + x * c) % 256
-                           for x in range(w)) for y in range(h)]
-                    for z in range(nf)]
-                if d % cmod == 0:
-                    import struct as _st
-                    blob = (make_gif_animation(frames[:-1])[:-1]
-                            + b"\x2c" + _st.pack("<HHHH", 0, 0, w, h)
-                            + b"\x00\x08\x14" + b"\xff" * 20 + b"\x00\x3b")
-                else:
-                    blob = make_gif_animation(frames)
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        nf = fb + d % fm
+        frames = [
+            [bytes((d * a + (z // sl) * sj + z * sd
+                    + y * b + x * c) % 256
+                   for x in range(w)) for y in range(h)]
+            for z in range(nf)]
+        if d % cmod == 0:
+            import struct as _st
+            return (make_gif_animation(frames[:-1])[:-1]
+                    + b"\x2c" + _st.pack("<HHHH", 0, 0, w, h)
+                    + b"\x00\x08\x14" + b"\xff" * 20 + b"\x00\x3b")
+        return make_gif_animation(frames)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def detect_shots(df: DataFrame,
@@ -4828,51 +4437,23 @@ def detect_shots(df: DataFrame,
     operator every ingest pipeline runs (sampling one frame per SHOT
     beats sampling every k-th frame of a static scene)."""
     cm = cut_mean
-    dec = decode_gif_frame_pixels
 
-    def _detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("n_frames", "n_pairs", "n_cuts", "first_cut_pair",
-                "max_pair_delta")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                got = dec(bytes(payload))
-                if got is None:
-                    for k in keys:
-                        cols[k].append(None)
-                    continue
-                deltas = []
-                for (w1, h1, v1), (w2, h2, v2) in zip(got, got[1:]):
-                    if (w1, h1) != (w2, h2):
-                        deltas = None
-                        break
-                    deltas.append(sum(abs(a2 - a1)
-                                      for a1, a2 in zip(v1, v2)))
-                if deltas is None:
-                    for k in keys:
-                        cols[k].append(None)
-                    continue
-                n_px = got[0][0] * got[0][1]
-                cuts = [z for z, s in enumerate(deltas)
-                        if s > cm * n_px]
-                cols["n_frames"].append(len(got))
-                cols["n_pairs"].append(len(deltas))
-                cols["n_cuts"].append(len(cuts))
-                cols["first_cut_pair"].append(cuts[0] if cuts else None)
-                cols["max_pair_delta"].append(max(deltas) if deltas
-                                              else None)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                "n_pairs": pd.array(cols["n_pairs"], dtype="Int32"),
-                "n_cuts": pd.array(cols["n_cuts"], dtype="Int32"),
-                "first_cut_pair": pd.array(cols["first_cut_pair"],
-                                           dtype="Int32"),
-                "max_pair_delta": pd.array(cols["max_pair_delta"],
-                                           dtype="Int64")})
+    def shot_stats(blob: bytes):
+        got = decode_gif_frame_pixels(blob)
+        if got is None:
+            return None
+        deltas = []
+        for (w1, h1, v1), (w2, h2, v2) in zip(got, got[1:]):
+            if (w1, h1) != (w2, h2):
+                return None
+            deltas.append(sum(abs(a2 - a1) for a1, a2 in zip(v1, v2)))
+        n_px = got[0][0] * got[0][1]
+        cuts = [z for z, s in enumerate(deltas) if s > cm * n_px]
+        return (len(got), len(deltas), len(cuts),
+                cuts[0] if cuts else None,
+                max(deltas) if deltas else None)
 
-    return df.select("doc_id", "payload").mapInPandas(_detect, SHOT_SCHEMA)
+    return _decode_stats(df, shot_stats, SHOT_SCHEMA)
 
 
 def multimodal_shot_detect_query(spark: SparkSession,
@@ -5056,55 +4637,22 @@ def synthesize_ppm_payloads(df: DataFrame) -> DataFrame:
     a, b, c_, dd = PPM_A, PPM_B, PPM_C, PPM_D
     cm, xm = PPM_COMMENT_MOD, PPM_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                mv = mvb + d % mvm
-                rows = [[tuple((d * a + y * b + x * c_ + ch * dd)
-                               % (mv + 1) for ch in range(3))
-                         for x in range(w)] for y in range(h)]
-                blob = mk(rows, mv, d % cm == 0)
-                if d % xm == 0:
-                    blob = blob[:-1]
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        mv = mvb + d % mvm
+        rows = [[tuple((d * a + y * b + x * c_ + ch * dd)
+                       % (mv + 1) for ch in range(3))
+                 for x in range(w)] for y in range(h)]
+        blob = mk(rows, mv, d % cm == 0)
+        if d % xm == 0:
+            blob = blob[:-1]
+        return blob
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_ppm(df: DataFrame) -> DataFrame:
-    dec = decode_ppm_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_px", "maxval", "sum_r", "sum_g",
-                "sum_b", "first_px_r", "last_px_b")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 9
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "maxval": pd.array(cols["maxval"], dtype="Int32"),
-                "sum_r": pd.array(cols["sum_r"], dtype="Int64"),
-                "sum_g": pd.array(cols["sum_g"], dtype="Int64"),
-                "sum_b": pd.array(cols["sum_b"], dtype="Int64"),
-                "first_px_r": pd.array(cols["first_px_r"], dtype="Int32"),
-                "last_px_b": pd.array(cols["last_px_b"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, PPM_SCHEMA)
+    return _decode_stats(df, decode_ppm_stats, PPM_SCHEMA)
 
 
 def multimodal_decode_ppm_query(spark: SparkSession,
@@ -5308,54 +4856,21 @@ def synthesize_aiff_payloads(df: DataFrame) -> DataFrame:
     smod, soff = AIFF_SAMPLE_MOD, AIFF_SAMPLE_OFF
     swm, cm = AIFF_SWAP_MOD, AIFF_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                nf = fb + d % fm
-                rate = rb + rs * (d % rm)
-                samples = [((d * a + i * b) % smod) - soff
-                           for i in range(nf)]
-                blob = mk(samples, rate, d % swm == 0)
-                if d % cm == 0:
-                    blob = blob[:-2]
-                payloads.append(blob)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        nf = fb + d % fm
+        rate = rb + rs * (d % rm)
+        samples = [((d * a + i * b) % smod) - soff
+                   for i in range(nf)]
+        blob = mk(samples, rate, d % swm == 0)
+        if d % cm == 0:
+            blob = blob[:-2]
+        return blob
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_aiff(df: DataFrame) -> DataFrame:
-    dec = decode_aiff_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("n_frames", "sample_rate", "sum_abs", "max_abs",
-                "first_sample", "last_sample")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_frames": pd.array(cols["n_frames"], dtype="Int64"),
-                "sample_rate": pd.array(cols["sample_rate"],
-                                        dtype="Int32"),
-                "sum_abs": pd.array(cols["sum_abs"], dtype="Int64"),
-                "max_abs": pd.array(cols["max_abs"], dtype="Int32"),
-                "first_sample": pd.array(cols["first_sample"],
-                                         dtype="Int32"),
-                "last_sample": pd.array(cols["last_sample"],
-                                        dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, AIFF_SCHEMA)
+    return _decode_stats(df, decode_aiff_stats, AIFF_SCHEMA)
 
 
 def multimodal_decode_aiff_query(spark: SparkSession,
@@ -5556,51 +5071,22 @@ def synthesize_ico_payloads(df: DataFrame) -> DataFrame:
                           ICO_H_BASE, ICO_H_MOD)
     cm = ICO_CORRUPT_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                n = 1 + d % nm
-                dims = [(wb + (d + 3 * j) % wm, hb + (d + 5 * j) % hm)
-                        for j in range(n)]
-                kinds = ["png" if (d + j) % 2 == 0 else "dib"
-                         for j in range(n)]
-                blob = bytearray(mk(dims, kinds))
-                if d % cm == 0:
-                    blob[6] = (blob[6] + 1) % 256  # directory lies
-                payloads.append(bytes(blob))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        n = 1 + d % nm
+        dims = [(wb + (d + 3 * j) % wm, hb + (d + 5 * j) % hm)
+                for j in range(n)]
+        kinds = ["png" if (d + j) % 2 == 0 else "dib"
+                 for j in range(n)]
+        blob = bytearray(mk(dims, kinds))
+        if d % cm == 0:
+            blob[6] = (blob[6] + 1) % 256  # directory lies
+        return bytes(blob)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_ico(df: DataFrame) -> DataFrame:
-    dec = decode_ico_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("n_images", "n_png", "n_dib", "sum_w", "sum_h", "max_w")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_images": pd.array(cols["n_images"], dtype="Int32"),
-                "n_png": pd.array(cols["n_png"], dtype="Int32"),
-                "n_dib": pd.array(cols["n_dib"], dtype="Int32"),
-                "sum_w": pd.array(cols["sum_w"], dtype="Int64"),
-                "sum_h": pd.array(cols["sum_h"], dtype="Int64"),
-                "max_w": pd.array(cols["max_w"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, ICO_SCHEMA)
+    return _decode_stats(df, decode_ico_stats, ICO_SCHEMA)
 
 
 def multimodal_decode_ico_query(spark: SparkSession,
@@ -5894,56 +5380,19 @@ def synthesize_tiff_payloads(df: DataFrame) -> DataFrame:
     TIFF_CORRUPT_MOD-th doc's last strip offset points beyond EOF."""
     mk = make_tiff
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                payloads.append(mk(
-                    d, TIFF_W_BASE + d % TIFF_W_MOD,
-                    TIFF_H_BASE + d % TIFF_H_MOD,
-                    1 + d % TIFF_RPS_MOD,
-                    d % TIFF_PACK_MOD == 0, d % TIFF_BE_MOD == 0,
-                    d % TIFF_SOFT_MOD == 0,
-                    d % TIFF_CORRUPT_MOD == 0))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, TIFF_W_BASE + d % TIFF_W_MOD,
+                  TIFF_H_BASE + d % TIFF_H_MOD,
+                  1 + d % TIFF_RPS_MOD,
+                  d % TIFF_PACK_MOD == 0, d % TIFF_BE_MOD == 0,
+                  d % TIFF_SOFT_MOD == 0,
+                  d % TIFF_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_tiff(df: DataFrame) -> DataFrame:
-    dec = decode_tiff_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("byte_order", "width", "height", "n_strips",
-                "compression", "n_data_bytes", "sum_px", "first_px",
-                "last_px")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 9
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "byte_order": cols["byte_order"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_strips": pd.array(cols["n_strips"], dtype="Int32"),
-                "compression": pd.array(cols["compression"],
-                                        dtype="Int32"),
-                "n_data_bytes": pd.array(cols["n_data_bytes"],
-                                         dtype="Int64"),
-                "sum_px": pd.array(cols["sum_px"], dtype="Int64"),
-                "first_px": pd.array(cols["first_px"], dtype="Int32"),
-                "last_px": pd.array(cols["last_px"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, TIFF_SCHEMA)
+    return _decode_stats(df, decode_tiff_stats, TIFF_SCHEMA)
 
 
 def multimodal_decode_tiff_query(spark: SparkSession,
@@ -6315,56 +5764,19 @@ def synthesize_tiff_lzw_payloads(df: DataFrame) -> DataFrame:
     final code stream is truncated so EOI never arrives."""
     mk = make_tiff_lzw
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                payloads.append(mk(
-                    d, TIFFLZ_W_BASE + d % TIFFLZ_W_MOD,
-                    TIFFLZ_H_BASE + d % TIFFLZ_H_MOD,
-                    1 + d % TIFFLZ_RPS_MOD,
-                    1 if d % TIFFLZ_PRED_MOD == 0 else 2,
-                    d % TIFFLZ_BE_MOD == 0,
-                    d % TIFFLZ_CORRUPT_MOD == 0))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, TIFFLZ_W_BASE + d % TIFFLZ_W_MOD,
+                  TIFFLZ_H_BASE + d % TIFFLZ_H_MOD,
+                  1 + d % TIFFLZ_RPS_MOD,
+                  1 if d % TIFFLZ_PRED_MOD == 0 else 2,
+                  d % TIFFLZ_BE_MOD == 0,
+                  d % TIFFLZ_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_tiff_lzw(df: DataFrame) -> DataFrame:
-    dec = decode_tiff_lzw_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("byte_order", "width", "height", "n_strips",
-                "predictor", "sum_px", "sum_stored", "first_px",
-                "last_px")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 9
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "byte_order": cols["byte_order"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_strips": pd.array(cols["n_strips"], dtype="Int32"),
-                "predictor": pd.array(cols["predictor"], dtype="Int32"),
-                "sum_px": pd.array(cols["sum_px"], dtype="Int64"),
-                "sum_stored": pd.array(cols["sum_stored"],
-                                       dtype="Int64"),
-                "first_px": pd.array(cols["first_px"], dtype="Int32"),
-                "last_px": pd.array(cols["last_px"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode,
-                                                      TIFFLZ_SCHEMA)
+    return _decode_stats(df, decode_tiff_lzw_stats, TIFFLZ_SCHEMA)
 
 
 def multimodal_decode_tiff_lzw_query(spark: SparkSession,
@@ -6613,50 +6025,16 @@ def synthesize_bmprle_payloads(df: DataFrame) -> DataFrame:
     overflows the row."""
     mk = make_bmprle
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                payloads.append(mk(
-                    d, BMPRLE_W_BASE + d % BMPRLE_W_MOD,
-                    BMPRLE_H_BASE + d % BMPRLE_H_MOD,
-                    d % BMPRLE_CORRUPT_MOD == 0))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, BMPRLE_W_BASE + d % BMPRLE_W_MOD,
+                  BMPRLE_H_BASE + d % BMPRLE_H_MOD,
+                  d % BMPRLE_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_bmprle(df: DataFrame) -> DataFrame:
-    dec = decode_bmprle_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "sum_idx", "first_px", "last_px",
-                "n_abs_rows", "n_delta_rows")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 7
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "sum_idx": pd.array(cols["sum_idx"], dtype="Int64"),
-                "first_px": pd.array(cols["first_px"], dtype="Int32"),
-                "last_px": pd.array(cols["last_px"], dtype="Int32"),
-                "n_abs_rows": pd.array(cols["n_abs_rows"], dtype="Int32"),
-                "n_delta_rows": pd.array(cols["n_delta_rows"],
-                                         dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(
-        _decode, BMPRLE_SCHEMA)
+    return _decode_stats(df, decode_bmprle_stats, BMPRLE_SCHEMA)
 
 
 def multimodal_decode_bmprle_query(spark: SparkSession,
@@ -6923,55 +6301,18 @@ def synthesize_avi_payloads(df: DataFrame) -> DataFrame:
     offset is shifted by 2 (a lying frame index)."""
     mk = make_avi
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                payloads.append(mk(
-                    d, AVI_W_BASE + d % AVI_W_MOD,
-                    AVI_H_BASE + d % AVI_H_MOD,
-                    AVI_NF_BASE + d % AVI_NF_MOD,
-                    AVI_UPF_BASE + d % AVI_UPF_MOD,
-                    d % AVI_CORRUPT_MOD == 0))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, AVI_W_BASE + d % AVI_W_MOD,
+                  AVI_H_BASE + d % AVI_H_MOD,
+                  AVI_NF_BASE + d % AVI_NF_MOD,
+                  AVI_UPF_BASE + d % AVI_UPF_MOD,
+                  d % AVI_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_avi(df: DataFrame) -> DataFrame:
-    dec = decode_avi_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_frames", "us_per_frame",
-                "n_sampled", "n_frame_bytes", "sum_px", "first_px",
-                "last_px")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 9
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_frames": pd.array(cols["n_frames"], dtype="Int32"),
-                "us_per_frame": pd.array(cols["us_per_frame"],
-                                         dtype="Int32"),
-                "n_sampled": pd.array(cols["n_sampled"], dtype="Int32"),
-                "n_frame_bytes": pd.array(cols["n_frame_bytes"],
-                                          dtype="Int64"),
-                "sum_px": pd.array(cols["sum_px"], dtype="Int64"),
-                "first_px": pd.array(cols["first_px"], dtype="Int32"),
-                "last_px": pd.array(cols["last_px"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, AVI_SCHEMA)
+    return _decode_stats(df, decode_avi_stats, AVI_SCHEMA)
 
 
 def multimodal_decode_avi_query(spark: SparkSession,
@@ -7206,46 +6547,14 @@ def synthesize_zip_payloads(df: DataFrame) -> DataFrame:
     payload byte flipped AFTER its CRC was recorded."""
     mk = make_zip
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = [mk(abs(int(doc_id)),
-                           abs(int(doc_id)) % ZIP_CORRUPT_MOD == 0)
-                        for doc_id in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, d % ZIP_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_zip(df: DataFrame) -> DataFrame:
-    dec = decode_zip_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("n_members", "n_deflated", "total_uncomp", "sum_bytes",
-                "first_byte", "last_byte")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_members": pd.array(cols["n_members"], dtype="Int32"),
-                "n_deflated": pd.array(cols["n_deflated"],
-                                       dtype="Int32"),
-                "total_uncomp": pd.array(cols["total_uncomp"],
-                                         dtype="Int64"),
-                "sum_bytes": pd.array(cols["sum_bytes"], dtype="Int64"),
-                "first_byte": pd.array(cols["first_byte"],
-                                       dtype="Int32"),
-                "last_byte": pd.array(cols["last_byte"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, ZIP_SCHEMA)
+    return _decode_stats(df, decode_zip_stats, ZIP_SCHEMA)
 
 
 def multimodal_decode_zip_query(spark: SparkSession,
@@ -7440,45 +6749,14 @@ def synthesize_tar_payloads(df: DataFrame) -> DataFrame:
     off-by-one checksum."""
     mk = make_tar
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = [mk(abs(int(doc_id)),
-                           abs(int(doc_id)) % TAR_CORRUPT_MOD == 0)
-                        for doc_id in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, d % TAR_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_tar(df: DataFrame) -> DataFrame:
-    dec = decode_tar_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("n_members", "n_skipped", "total_bytes", "sum_bytes",
-                "first_byte", "last_byte")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_members": pd.array(cols["n_members"], dtype="Int32"),
-                "n_skipped": pd.array(cols["n_skipped"], dtype="Int32"),
-                "total_bytes": pd.array(cols["total_bytes"],
-                                        dtype="Int64"),
-                "sum_bytes": pd.array(cols["sum_bytes"], dtype="Int64"),
-                "first_byte": pd.array(cols["first_byte"],
-                                       dtype="Int32"),
-                "last_byte": pd.array(cols["last_byte"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, TAR_SCHEMA)
+    return _decode_stats(df, decode_tar_stats, TAR_SCHEMA)
 
 
 def multimodal_decode_tar_query(spark: SparkSession,
@@ -7540,9 +6818,15 @@ MIDI_N_BASE = 4         # notes per file = BASE + d % MOD
 MIDI_N_MOD = 13
 MIDI_CORRUPT_MOD = 41   # every 41st doc: lying MTrk length (truncation)
 
-MIDI_SCHEMA = ("doc_id long, n_notes int, total_ticks bigint, "
-               "pitch_sum bigint, vel_sum bigint, max_delta int, "
-               "tempo_us int")
+MIDI_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("n_notes", T.IntegerType()),
+    T.StructField("total_ticks", T.LongType()),
+    T.StructField("pitch_sum", T.LongType()),
+    T.StructField("vel_sum", T.LongType()),
+    T.StructField("max_delta", T.IntegerType()),
+    T.StructField("tempo_us", T.IntegerType()),
+])
 
 
 def _build_midi_codecs():
@@ -7685,44 +6969,14 @@ def synthesize_midi_payloads(df: DataFrame) -> DataFrame:
     window before end-of-track)."""
     mk = make_midi
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = [mk(abs(int(doc_id)),
-                           abs(int(doc_id)) % MIDI_CORRUPT_MOD == 0)
-                        for doc_id in pdf["doc_id"]]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        return mk(d, d % MIDI_CORRUPT_MOD == 0)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_midi(df: DataFrame) -> DataFrame:
-    dec = decode_midi_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("n_notes", "total_ticks", "pitch_sum", "vel_sum",
-                "max_delta", "tempo_us")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "n_notes": pd.array(cols["n_notes"], dtype="Int32"),
-                "total_ticks": pd.array(cols["total_ticks"],
-                                        dtype="Int64"),
-                "pitch_sum": pd.array(cols["pitch_sum"], dtype="Int64"),
-                "vel_sum": pd.array(cols["vel_sum"], dtype="Int64"),
-                "max_delta": pd.array(cols["max_delta"], dtype="Int32"),
-                "tempo_us": pd.array(cols["tempo_us"], dtype="Int32")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, MIDI_SCHEMA)
+    return _decode_stats(df, decode_midi_stats, MIDI_SCHEMA)
 
 
 def multimodal_decode_midi_query(spark: SparkSession,
@@ -7792,9 +7046,16 @@ ADAM7_B = 100_003
 ADAM7_C = 999_983
 ADAM7_CORRUPT_MOD = 43  # every 43rd doc: truncated deflate stream
 
-ADAM7_SCHEMA = ("doc_id long, width int, height int, n_px int, "
-                "pix_sum bigint, pix_min int, pix_max int, "
-                "pass1_sum bigint")
+ADAM7_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("n_px", T.IntegerType()),
+    T.StructField("pix_sum", T.LongType()),
+    T.StructField("pix_min", T.IntegerType()),
+    T.StructField("pix_max", T.IntegerType()),
+    T.StructField("pass1_sum", T.LongType()),
+])
 
 # (x_start, y_start, x_step, y_step) per PNG spec §8.2
 ADAM7_PASSES = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -7976,50 +7237,17 @@ def synthesize_png_adam7_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = ADAM7_W_BASE, ADAM7_W_MOD, ADAM7_H_BASE, ADAM7_H_MOD
     a, b, c = ADAM7_A, ADAM7_B, ADAM7_C
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                img = [bytes((d * a + y * b + x * c) % 256
-                             for x in range(w)) for y in range(h)]
-                payloads.append(mk(img, corrupt=(d % ADAM7_CORRUPT_MOD
-                                                 == 0)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        img = [bytes((d * a + y * b + x * c) % 256
+                     for x in range(w)) for y in range(h)]
+        return mk(img, corrupt=(d % ADAM7_CORRUPT_MOD == 0))
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_png_adam7(df: DataFrame) -> DataFrame:
-    dec = decode_png_adam7_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_px", "pix_sum", "pix_min",
-                "pix_max", "pass1_sum")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 7
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_px": pd.array(cols["n_px"], dtype="Int32"),
-                "pix_sum": pd.array(cols["pix_sum"], dtype="Int64"),
-                "pix_min": pd.array(cols["pix_min"], dtype="Int32"),
-                "pix_max": pd.array(cols["pix_max"], dtype="Int32"),
-                "pass1_sum": pd.array(cols["pass1_sum"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode,
-                                                      ADAM7_SCHEMA)
+    return _decode_stats(df, decode_png_adam7_stats, ADAM7_SCHEMA)
 
 
 def multimodal_decode_png_adam7_query(spark: SparkSession,
@@ -8085,32 +7313,18 @@ register(QuerySpec("multimodal_decode_png_adam7",
 
 FIR_CORRUPT_MOD = 19
 
-FIR_SCHEMA = ("doc_id long, channels int, n_out int, fir_peak int, "
-              "fir_sum bigint, fir_hot bigint")
+FIR_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("channels", T.IntegerType()),
+    T.StructField("n_out", T.IntegerType()),
+    T.StructField("fir_peak", T.IntegerType()),
+    T.StructField("fir_sum", T.LongType()),
+    T.StructField("fir_hot", T.LongType()),
+])
 
 
 def decode_wav_fir(df: DataFrame) -> DataFrame:
-    parse = parse_wav_fir
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("channels", "n_out", "fir_peak", "fir_sum", "fir_hot")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = parse(bytes(payload))
-                vals = st if st is not None else (None,) * 5
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "channels": pd.array(cols["channels"], dtype="Int32"),
-                "n_out": pd.array(cols["n_out"], dtype="Int32"),
-                "fir_peak": pd.array(cols["fir_peak"], dtype="Int32"),
-                "fir_sum": pd.array(cols["fir_sum"], dtype="Int64"),
-                "fir_hot": pd.array(cols["fir_hot"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, FIR_SCHEMA)
+    return _decode_stats(df, parse_wav_fir, FIR_SCHEMA)
 
 
 def multimodal_audio_fir_query(spark: SparkSession,
@@ -8204,8 +7418,15 @@ DRI_CORRUPT_MOD = 11
 DRI_TRUNC_MOD = 13
 DRI_BADRST_MOD = 19
 
-DRI_SCHEMA = ("doc_id long, width int, height int, n_blocks int, "
-              "n_segs int, n_ok_blocks int, ok_pix_sum bigint")
+DRI_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("n_blocks", T.IntegerType()),
+    T.StructField("n_segs", T.IntegerType()),
+    T.StructField("n_ok_blocks", T.IntegerType()),
+    T.StructField("ok_pix_sum", T.LongType()),
+])
 
 
 def _build_jpeg_dri_codecs():
@@ -8531,62 +7752,30 @@ def synthesize_jpeg_dri_payloads(df: DataFrame) -> DataFrame:
     rb, rm = DRI_R_BASE, DRI_R_MOD
     cm, tm, bm = DRI_CORRUPT_MOD, DRI_TRUNC_MOD, DRI_BADRST_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                r = rb + d % rm
-                nbx, nby = -(-w // 8), -(-h // 8)
-                nb = nbx * nby
-                n_segs = -(-nb // r)
-                grid = [dcv(d, by, bx)
-                        for by in range(nby) for bx in range(nbx)]
-                kw = {}
-                if d % cm == 0:
-                    kw["corrupt_seg"] = (d // cm) % n_segs
-                elif d % tm == 0:
-                    kw["truncate_tail"] = True
-                elif d % bm == 0 and n_segs > 1:
-                    # a single-segment image writes no RST marker, so
-                    # there is no ordinal to corrupt: such docs are OK
-                    kw["bad_rst"] = True
-                payloads.append(mk(grid, w, h, r, **kw))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        r = rb + d % rm
+        nbx, nby = -(-w // 8), -(-h // 8)
+        nb = nbx * nby
+        n_segs = -(-nb // r)
+        grid = [dcv(d, by, bx)
+                for by in range(nby) for bx in range(nbx)]
+        kw = {}
+        if d % cm == 0:
+            kw["corrupt_seg"] = (d // cm) % n_segs
+        elif d % tm == 0:
+            kw["truncate_tail"] = True
+        elif d % bm == 0 and n_segs > 1:
+            # a single-segment image writes no RST marker, so
+            # there is no ordinal to corrupt: such docs are OK
+            kw["bad_rst"] = True
+        return mk(grid, w, h, r, **kw)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_jpeg_dri(df: DataFrame) -> DataFrame:
-    dec = decode_jpeg_dri_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_blocks", "n_segs", "n_ok_blocks",
-                "ok_pix_sum")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_blocks": pd.array(cols["n_blocks"], dtype="Int32"),
-                "n_segs": pd.array(cols["n_segs"], dtype="Int32"),
-                "n_ok_blocks": pd.array(cols["n_ok_blocks"],
-                                        dtype="Int32"),
-                "ok_pix_sum": pd.array(cols["ok_pix_sum"],
-                                       dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, DRI_SCHEMA)
+    return _decode_stats(df, decode_jpeg_dri_stats, DRI_SCHEMA)
 
 
 def multimodal_jpeg_restart_query(spark: SparkSession,
@@ -8696,8 +7885,15 @@ PROG_PREVIEW_MOD = 13
 PROG_BASELINE_MOD = 19
 PROG_AL = 1  # successive-approximation split: first scan sends dc >> 1
 
-PROG_SCHEMA = ("doc_id long, width int, height int, n_blocks int, "
-               "n_scans int, n_refined int, pix_sum bigint")
+PROG_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("n_blocks", T.IntegerType()),
+    T.StructField("n_scans", T.IntegerType()),
+    T.StructField("n_refined", T.IntegerType()),
+    T.StructField("pix_sum", T.LongType()),
+])
 
 
 def _build_jpeg_prog_codecs():
@@ -8967,57 +8163,26 @@ def synthesize_jpeg_prog_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = PROG_W_BASE, PROG_W_MOD, PROG_H_BASE, PROG_H_MOD
     cm, tm, bm = PROG_PARTIAL_MOD, PROG_PREVIEW_MOD, PROG_BASELINE_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                nbx, nby = -(-w // 8), -(-h // 8)
-                nb = nbx * nby
-                grid = [dcv(d, by, bx)
-                        for by in range(nby) for bx in range(nbx)]
-                if d % cm == 0:
-                    kept = (d // cm) % (nb // 8 + 1)
-                    payloads.append(mk(grid, w, h, refine_bytes=kept))
-                elif d % tm == 0:
-                    payloads.append(mk(grid, w, h, refine=False))
-                elif d % bm == 0:
-                    payloads.append(mk_base(grid, w, h))  # SOF0 in-band
-                else:
-                    payloads.append(mk(grid, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        nbx, nby = -(-w // 8), -(-h // 8)
+        nb = nbx * nby
+        grid = [dcv(d, by, bx)
+                for by in range(nby) for bx in range(nbx)]
+        if d % cm == 0:
+            kept = (d // cm) % (nb // 8 + 1)
+            return mk(grid, w, h, refine_bytes=kept)
+        if d % tm == 0:
+            return mk(grid, w, h, refine=False)
+        if d % bm == 0:
+            return mk_base(grid, w, h)  # SOF0 in-band
+        return mk(grid, w, h)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_jpeg_prog(df: DataFrame) -> DataFrame:
-    dec = decode_jpeg_prog_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_blocks", "n_scans", "n_refined",
-                "pix_sum")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 6
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_blocks": pd.array(cols["n_blocks"], dtype="Int32"),
-                "n_scans": pd.array(cols["n_scans"], dtype="Int32"),
-                "n_refined": pd.array(cols["n_refined"], dtype="Int32"),
-                "pix_sum": pd.array(cols["pix_sum"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, PROG_SCHEMA)
+    return _decode_stats(df, decode_jpeg_prog_stats, PROG_SCHEMA)
 
 
 def multimodal_jpeg_progressive_query(spark: SparkSession,
@@ -9129,27 +8294,41 @@ ACS_DCONLY_MOD = 13
 ACS_BASELINE_MOD = 19
 ACS_BANDS = ((1, 5), (6, 63))
 
-ACS_SCHEMA = ("doc_id long, width int, height int, n_blocks int, "
-              "n_scans_ok int, n_ac int, ac_checksum bigint, "
-              "dc_sum bigint")
+ACS_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("width", T.IntegerType()),
+    T.StructField("height", T.IntegerType()),
+    T.StructField("n_blocks", T.IntegerType()),
+    T.StructField("n_scans_ok", T.IntegerType()),
+    T.StructField("n_ac", T.IntegerType()),
+    T.StructField("ac_checksum", T.LongType()),
+    T.StructField("dc_sum", T.LongType()),
+])
 
 
-def jpeg_ac_plant(d: int, bi: int) -> dict:
-    """The synthesized AC spectrum of block ``bi`` (natural in-scan
-    coefficient order): sparse, with empty-band blocks (EOBRUN food),
-    long zero gaps (ZRL food), and sign/amplitude variety. The oracle
-    knows payload content ONLY through this formula."""
-    coeffs = {}
-    if (d + bi) % 3 != 0:  # low band (1..5): at most one coefficient
-        k = 1 + (d + bi) % 5
-        v = 1 + (d * 7 + bi) % 6
-        coeffs[k] = v if (d + bi) % 2 == 0 else -v
-    if (d + bi) % 4 == 1:  # high band (6..63): two, far apart
-        k1 = 6 + (d + bi * 3) % 20
-        coeffs[k1] = 1 + (d + bi) % 3
-        k2 = 30 + (d * 3 + bi) % 34
-        coeffs[k2] = -(1 + (d * 5 + bi) % 4)
-    return coeffs
+def _build_jpeg_ac_plant():
+    def jpeg_ac_plant(d: int, bi: int) -> dict:
+        """The synthesized AC spectrum of block ``bi`` (natural in-scan
+        coefficient order): sparse, with empty-band blocks (EOBRUN food),
+        long zero gaps (ZRL food), and sign/amplitude variety. The oracle
+        knows payload content ONLY through this formula."""
+        coeffs = {}
+        if (d + bi) % 3 != 0:  # low band (1..5): at most one coefficient
+            k = 1 + (d + bi) % 5
+            v = 1 + (d * 7 + bi) % 6
+            coeffs[k] = v if (d + bi) % 2 == 0 else -v
+        if (d + bi) % 4 == 1:  # high band (6..63): two, far apart
+            k1 = 6 + (d + bi * 3) % 20
+            coeffs[k1] = 1 + (d + bi) % 3
+            k2 = 30 + (d * 3 + bi) % 34
+            coeffs[k2] = -(1 + (d * 5 + bi) % 4)
+        return coeffs
+
+    return jpeg_ac_plant
+
+
+# nested so closures calling it pickle it by value (see make_png)
+jpeg_ac_plant = _build_jpeg_ac_plant()
 
 
 def _build_jpeg_ac_codecs():
@@ -9468,59 +8647,26 @@ def synthesize_jpeg_ac_payloads(df: DataFrame) -> DataFrame:
     wb, wm, hb, hm = ACS_W_BASE, ACS_W_MOD, ACS_H_BASE, ACS_H_MOD
     tm, dm, bm = ACS_TRUNC_MOD, ACS_DCONLY_MOD, ACS_BASELINE_MOD
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                d = abs(int(doc_id))
-                w, h = wb + d % wm, hb + d % hm
-                nbx, nby = -(-w // 8), -(-h // 8)
-                nb = nbx * nby
-                grid = [dcv(d, by, bx)
-                        for by in range(nby) for bx in range(nbx)]
-                acg = [plant(d, bi) for bi in range(nb)]
-                if d % tm == 0:
-                    payloads.append(mk(grid, acg, w, h, trunc_last=True))
-                elif d % dm == 0:
-                    payloads.append(mk(grid, acg, w, h, n_band_scans=0))
-                elif d % bm == 0:
-                    payloads.append(mk_base(grid, w, h))  # SOF0 in-band
-                else:
-                    payloads.append(mk(grid, acg, w, h))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "payload": payloads})
+    def blob_of(d: int) -> bytes:
+        w, h = wb + d % wm, hb + d % hm
+        nbx, nby = -(-w // 8), -(-h // 8)
+        nb = nbx * nby
+        grid = [dcv(d, by, bx)
+                for by in range(nby) for bx in range(nbx)]
+        acg = [plant(d, bi) for bi in range(nb)]
+        if d % tm == 0:
+            return mk(grid, acg, w, h, trunc_last=True)
+        if d % dm == 0:
+            return mk(grid, acg, w, h, n_band_scans=0)
+        if d % bm == 0:
+            return mk_base(grid, w, h)  # SOF0 in-band
+        return mk(grid, acg, w, h)
 
-    return df.select("doc_id").mapInPandas(
-        _synth, "doc_id long, payload binary")
+    return _synthesize(df, blob_of)
 
 
 def decode_jpeg_ac(df: DataFrame) -> DataFrame:
-    dec = decode_jpeg_ac_stats
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as pd
-        keys = ("width", "height", "n_blocks", "n_scans_ok", "n_ac",
-                "ac_checksum", "dc_sum")
-        for pdf in batches:
-            cols = {k: [] for k in keys}
-            for payload in pdf["payload"]:
-                st = dec(bytes(payload))
-                vals = st if st is not None else (None,) * 7
-                for k, v in zip(keys, vals):
-                    cols[k].append(v)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "width": pd.array(cols["width"], dtype="Int32"),
-                "height": pd.array(cols["height"], dtype="Int32"),
-                "n_blocks": pd.array(cols["n_blocks"], dtype="Int32"),
-                "n_scans_ok": pd.array(cols["n_scans_ok"], dtype="Int32"),
-                "n_ac": pd.array(cols["n_ac"], dtype="Int32"),
-                "ac_checksum": pd.array(cols["ac_checksum"],
-                                        dtype="Int64"),
-                "dc_sum": pd.array(cols["dc_sum"], dtype="Int64")})
-
-    return df.select("doc_id", "payload").mapInPandas(_decode, ACS_SCHEMA)
+    return _decode_stats(df, decode_jpeg_ac_stats, ACS_SCHEMA)
 
 
 def multimodal_jpeg_ac_query(spark: SparkSession,

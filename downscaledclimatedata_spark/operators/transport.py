@@ -8,8 +8,6 @@ seams, mirroring the reference's behavior:
 - HTTP streaming download piped straight to object storage with zero
   local buffering (reference loca2.py:31-44: ``requests.get(stream=True)``
   + ``upload_fileobj(response.raw, ...)``);
-- NetCDF blob -> Zarr store conversion (reference loca2.py:84-100:
-  ``xr.open_dataset`` + ``ds.to_zarr(mode='w', consolidated=True)``);
 - NetCDF blob -> tidy-long DataFrame decode (the engine's analytics form,
   SURVEY §1.5b).
 
@@ -104,30 +102,6 @@ def make_s3_piping_fetcher(bucket: str, key_root: str,
         return json.dumps({"bucket": _bucket, "s3_key": key}).encode()
 
     return fetch
-
-
-def xarray_zarr_converter(payload: bytes, out_path: str) -> int:
-    """Real ``converter`` for ingest_and_convert: NetCDF blob -> Zarr
-    store at ``out_path`` (blob-fidelity path, reference loca2.py:84-100:
-    ``mode='w'`` overwrite + consolidated metadata).
-
-    Requires ``xarray`` + a zarr backend on executors; raises a clear
-    error otherwise (the engine's deterministic default converter remains
-    the hermetic-test path).
-    """
-    try:
-        import xarray as xr
-    except ImportError as exc:  # pragma: no cover - exercised off-container
-        raise ImportError(
-            "xarray is required for NetCDF->Zarr conversion; install "
-            "xarray+zarr on the cluster or inject a converter") from exc
-    import io
-    ds = xr.open_dataset(io.BytesIO(payload))
-    try:
-        ds.to_zarr(out_path, mode="w", consolidated=True)
-        return len(payload)
-    finally:
-        ds.close()
 
 
 def xarray_tidy_decoder(payload: bytes, meta: dict) -> "pd.DataFrame":

@@ -82,5 +82,6 @@ class ProcessedLog:
          .write.mode("append").parquet(self.path))
 
     def filter_new(self, manifest: DataFrame, key_col: str = "s3_key") -> DataFrame:
-        log = self.read().select(F.col("run_key").alias(key_col)).distinct()
-        return manifest.join(log, on=key_col, how="left_anti")
+        # local import: importing discovery registers its specs
+        from downscaledclimatedata_spark.operators.discovery import new_work
+        return new_work(manifest, self.read(), key_col)
